@@ -38,6 +38,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -105,12 +106,6 @@ def stream_throughput(spark, sf_dir: str) -> tuple[int, float]:
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return n_rows, round(n_rows / wall, 1)
-
-
-def median(xs: list[float]) -> float:
-    s = sorted(xs)
-    mid = len(s) // 2
-    return s[mid] if len(s) % 2 else (s[mid - 1] + s[mid]) / 2
 
 
 # Driver tail-capture is 2000 chars (measured: len(BENCH_rN.json["tail"])
@@ -259,12 +254,14 @@ def skew_bench(spark, sf_dir: str, runs: int = 3) -> dict:
         }
         for name, df in legs.items():
             timed(df)  # warm: codegen compile out of the timed region
-            out[name] = round(median([timed(df) for _ in range(runs)]), 3)
+            out[name] = round(statistics.median([timed(df) for _ in range(runs)]), 3)
         for k, v in aqe_confs.items():
             spark.conf.set(k, v)
         aqe_df = fact.join(dim, "k")
         timed(aqe_df)
-        out["aqe_skew_sec"] = round(median([timed(aqe_df) for _ in range(runs)]), 3)
+        out["aqe_skew_sec"] = round(
+            statistics.median([timed(aqe_df) for _ in range(runs)]), 3
+        )
     finally:
         for k, v in saved.items():
             if v is None:
@@ -351,11 +348,11 @@ def main() -> None:
             # so run N+1 can't ride run N's cache
             release_caches()
 
-    per_query = {name: round(median(xs), 3) for name, xs in samples.items()}
+    per_query = {name: round(statistics.median(xs), 3) for name, xs in samples.items()}
 
     def med_field(name: str, field: str, scale: float) -> float | None:
         vals = [d[field] / scale for d in msamples[name]]
-        return round(median(vals), 3) if vals else None
+        return round(statistics.median(vals), 3) if vals else None
 
     # Per-query medians of the executor-side counters. CPU is the drift
     # discriminator; shuffle bytes are plan-shape evidence (they must be

@@ -98,7 +98,12 @@ def minhash_sig_cols(text_col: str = "text") -> list[Column]:
     simhash_fingerprints rationale above: the DSL form paid a py4j
     round trip per lambda/plumbing node — hundreds per plan build; the
     string parses to the identical Catalyst tree, bit-equality pinned
-    by test_rowlocal_sigs_match_batch_operator)."""
+    by test_rowlocal_sigs_match_batch_operator).
+
+    Contract: ``text_col`` is spliced verbatim into that SQL string, so
+    it must be a bare identifier or a SQL fragment; a column name with
+    spaces, dashes or a reserved word must be backquoted by the caller
+    (`my text`), as in any spark.sql text."""
     hms_sql = (
         f"transform(filter(split(lower({text_col}), ' '), t -> t != ''), "
         f"t -> CAST(conv(substring(md5(t), 1, 15), 16, 10) AS BIGINT) "

@@ -195,6 +195,8 @@ def ivf_assign(
     k-means offline; here the first NC corpus vectors serve as fixed
     centroids) and broadcasts — assignment is a narrow map over the
     corpus, one pass, no shuffle until the ranking window on vec_id.
+    ``id_col`` and ``vec_col`` are spliced into a selectExpr string
+    (the CONTRACT above sql_dot_spark): backquote non-bare names.
 
     Measured dead end (round 6, sf1, interleaved A/B with shuffle-byte
     capture): replacing the n_probe=1 ranking with

@@ -5,7 +5,10 @@ that ``__spark_entry__.py`` exposes to the driver. Importing this
 package populates the registry from every query module.
 """
 
+from pathlib import Path
+
 from flink_wikipedia_spark.plans.registry import REGISTRY, QueryDef, alias, query
+from flink_wikipedia_spark.plans.window import ROUND_CHANGED, load_history, rotate
 
 # Import for side effect: each module registers its queries.
 from flink_wikipedia_spark.plans import queries_core  # noqa: E402,F401
@@ -17,125 +20,20 @@ from flink_wikipedia_spark.plans import queries_dedup  # noqa: E402,F401
 from flink_wikipedia_spark.plans import queries_similarity  # noqa: E402,F401
 from flink_wikipedia_spark.plans import queries_curation  # noqa: E402,F401
 
-# The driver's correctness gate verifies the FIRST 50 registry entries
-# only (CORRECTNESS_r01 stopped at slot 50), so registration order is
-# part of the contract. STANDING WINDOW POLICY (coverage closed in
-# round 8 — every registry query has at least one driver record):
-#   1. flagship q_windowed_edit_size is always slot 1 (it is entry());
-#   2. any query whose implementation changed this round goes in-window
-#      (changed code with only stale evidence is untested code);
-#   3. remaining slots refresh the STALEST evidence first — per-query
-#      newest driver round comes from the CORRECTNESS_r*.json history;
-#   4. one anchor per operator family stays in-window every round so a
-#      family regression can never hide behind rotation;
-#   5. no-oracle (rows-only) queries in the window are pre-declared
-#      below so the verdict can check the gate outcome against a
-#      written prediction.
-#
-# ROUND-15 WINDOW — computed by ``tools/rotate_window.py --changed
-# q_bpe_merges q_bpe_encode q_bpe_vocab`` (this list is the tool's
-# verbatim output; re-run mid-round if the registry grows so new code
-# earns driver evidence in its own round).
-# Composition: rule 2 puts the ONE name with no driver record first
-# (q_bpe_ids — the tokenizer loop closed: per-document subword
-# token-id sequences with an exact md5-CSV fingerprint oracle); rule 3
-# adds the three BPE names touched by the ADVICE-r14 persist-leak fix
-# in bpe_learn_merges (distributed-path base frame now released after
-# round 1 — values unchanged, but the changed-code rule is about
-# evidence, not expected deltas); rule 4 holds the TWELVE family
-# anchors + flagship; rule 5 fills the remaining 33 slots
-# (50 − 1 flagship − 1 new − 3 changed − 12 anchors) with the stalest
-# evidence: the 10 remaining r11-vintage names (the q_tpch_q2/q3/q5/
-# q6/q8 + q15/q20/q22 TPC-H tail, q_unpivot_event_daily, q_vocab_ids)
-# then 23 r12-vintage names alphabetically (q_ann_ivf …
-# q_pagerank_parts_suppliers; the rest of the r12 band —
-# q_union_all_actions, q_unpivot_metrics et al. — waits for r16).
-# Expected r15 outcome: **47/50 hash-green, THREE rows-only-by-design
-# in-window** — the stalest-evidence rule reached the r12 band, which
-# contains the registry's only no-oracle names
-# (q_ann_ivfpq_refined, q_approx_distinct_users,
-# q_approx_percentile_value — cross-engine sketches, each
-# property-pinned with an oracled exact twin that is ALSO in-window:
-# q_distinct_users, q_median_value, q_ann_ivf).
-#
-# NOTE for the r16 rotation (pre-declared): once CORRECTNESS_r15.json
-# lands it becomes the rotation input — run ``python
-# tools/rotate_window.py --changed <r16-changed-names>``, paste its
-# output here verbatim, and update ROUND_CHANGED + the families pin in
-# tests/test_plan_audit.py in the same commit
-# (test_priority_window_is_rotation_tool_output fails on a stale
-# window by design, forcing the rotation at round start).
-_PRIORITY = [
-
-    "q_windowed_edit_size",  # r14
-    "q_bpe_ids",  # NEW (no driver row)
-    "q_bpe_encode",  # r14
-    "q_bpe_merges",  # r14
-    "q_bpe_vocab",  # r14
-    "q_filter_events",  # r14
-    "q_json_extract",  # r14
-    "q_word_count",  # r14
-    "q_pii_redact",  # r14
-    "q_dedup_docs_exact",  # r14
-    "q_multimodal_decode",  # r14
-    "q_similarity_lsh",  # r14
-    "q_join_orders_customer",  # r14
-    "q_tpch_q1_pricing_summary",  # r14
-    "q_rank_functions",  # r14
-    "q_dedup_components",  # r14
-    "q_keyby_agg_edit_size",  # r14
-    "q_tpch_q15_top_supplier",  # r11
-    "q_tpch_q20_excess_stock_suppliers",  # r11
-    "q_tpch_q22_dormant_accounts",  # r11
-    "q_tpch_q2_min_cost_supplier",  # r11
-    "q_tpch_q3_shipping_priority",  # r11
-    "q_tpch_q5_regional_revenue",  # r11
-    "q_tpch_q6_forecast_revenue",  # r11
-    "q_tpch_q8_market_share",  # r11
-    "q_unpivot_event_daily",  # r11
-    "q_vocab_ids",  # r11
-    "q_ann_ivf",  # r12
-    "q_ann_ivfpq_refined",  # r12
-    "q_antijoin_inactive_users",  # r12
-    "q_approx_distinct_users",  # r12
-    "q_approx_percentile_value",  # r12
-    "q_c4_quality",  # r12
-    "q_collect_user_lists",  # r12
-    "q_cube_orders",  # r12
-    "q_distinct_users",  # r12
-    "q_embedding_neardup_lsh",  # r12
-    "q_fingerprint",  # r12
-    "q_gopher_quality",  # r12
-    "q_hash_sample",  # r12
-    "q_having_active_users",  # r12
-    "q_ivfpq_search",  # r12
-    "q_lang_stats",  # r12
-    "q_like_filter_parts",  # r12
-    "q_median_value",  # r12
-    "q_minhash_dedup_clusters",  # r12
-    "q_minhash_signatures",  # r12
-    "q_ngram_jaccard_pairs",  # r12
-    "q_pagerank_converged",  # r12
-    "q_pagerank_parts_suppliers",  # r12
-    # --- driver cutoff is 50; everything below is registry tail ---
-]
-
 # SURVEY.md §2 names the O5 and E6 inventory queries differently than
 # their primary registrations; register the survey names as aliases so
 # a line-by-line inventory check resolves either name. Registered
-# BEFORE the reorder so _PRIORITY may place them inside the window.
+# BEFORE the reorder so the window may place them.
 alias("q_filter_human_main", "q_filter_events")
 alias("q_antijoin_inactive_users", "q_antijoin_quiet_customers")
 
 
 def _reorder() -> None:
-    missing = [n for n in _PRIORITY if n not in REGISTRY]
-    if missing:  # fail loudly at import — a typo here silently demotes a query
-        raise RuntimeError(f"priority list names unknown queries: {missing}")
-    if len(_PRIORITY) != 50:
-        raise RuntimeError(f"driver window must be exactly 50, got {len(_PRIORITY)}")
-    tail = [n for n in REGISTRY if n not in set(_PRIORITY)]
-    ordered = {n: REGISTRY[n] for n in [*_PRIORITY, *tail]}
+    # The driver's correctness gate verifies the first WINDOW registry
+    # entries, so registration order is part of the contract (window.py).
+    repo = Path(__file__).resolve().parents[2]
+    first = rotate(list(REGISTRY), load_history(repo), ROUND_CHANGED)
+    ordered = {n: REGISTRY[n] for n in dict.fromkeys([*first, *REGISTRY])}
     REGISTRY.clear()
     REGISTRY.update(ordered)
 

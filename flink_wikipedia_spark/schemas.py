@@ -300,17 +300,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.schema(table_schema(name)).parquet(path)
 
 
-# Scan-splittability cache: (path, stat-aggregate) -> row-group count,
-# capped (see _scan_row_groups_capped). Same driver-side-footer-only
-# posture as _TS_UNIT_CACHE.
-_ROW_GROUPS_CACHE: dict[tuple[str, int, int, int], int] = {}
+# Scan-splittability cache: (path, stat-aggregate, cap) -> row-group
+# count, capped (see _scan_row_groups_capped). Same
+# driver-side-footer-only posture as _TS_UNIT_CACHE.
+_ROW_GROUPS_CACHE: dict[tuple[str, int, int, int, int], int] = {}
 
 
 def _scan_row_groups_capped(path: str, cap: int) -> int:
     """Number of parquet row groups under ``path``, probing at most
     enough files to reach ``cap`` (a scan with ≥cap row groups is
     splittable enough — stop counting). Driver-side footer metadata
-    only, cached per (path, stat)."""
+    only, cached per (path, stat, cap): ``cap`` is in the key because a
+    count cut short at a small cap under-reports for a larger one.
+    The cache saves footer reads only; building the key still costs one
+    ``os.stat`` per parquet file under ``path`` on every call."""
     import pyarrow.parquet as pq
 
     files = []
@@ -329,11 +332,12 @@ def _scan_row_groups_capped(path: str, cap: int) -> int:
             max((s.st_mtime_ns for s in stats), default=0),
             sum(s.st_size for s in stats),
             len(files),
+            cap,
         )
     else:
         files = [path]
         st = os.stat(path)
-        key = (path, st.st_mtime_ns, st.st_size, 1)
+        key = (path, st.st_mtime_ns, st.st_size, 1, cap)
     cached = _ROW_GROUPS_CACHE.get(key)
     if cached is not None:
         return cached

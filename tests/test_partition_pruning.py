@@ -4,14 +4,19 @@ the mechanism that turns a 100 TB table into a one-day read.
 
 Complements tests/test_bucketing.py (shuffle elimination); together they
 cover the two physical-layout levers SCALE.md leans on.
+
+Also pins the row-group probe that gates load_table_spread's scan
+repartition.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pytest
 
-from flink_wikipedia_spark.schemas import load_table
+from flink_wikipedia_spark.schemas import _scan_row_groups_capped, load_table
 
 
 def test_date_partitioned_scan_prunes_files(spark, tmp_path):
@@ -177,3 +182,16 @@ def test_events_ts_predicate_reaches_parquet_scan(spark):
     m = re.search(r"PushedFilters: \[([^\]]*)\]", plan)
     assert m, plan
     assert "GreaterThanOrEqual(ts" in m.group(1), m.group(1)
+
+
+def test_row_group_probe_cache_is_keyed_on_cap(tmp_path):
+    """A count cut short at a small cap must not be reused for a larger
+    cap: an under-count makes load_table_spread repartition a scan that
+    is already splittable. Three one-row-group files: cap=1 stops
+    after the first file."""
+    table = tmp_path / "t.parquet"
+    table.mkdir()
+    for i in range(3):
+        pq.write_table(pa.table({"x": [i]}), table / f"part-{i}.parquet")
+    assert _scan_row_groups_capped(str(table), cap=1) == 1
+    assert _scan_row_groups_capped(str(table), cap=10) == 3

@@ -8,9 +8,20 @@ reaches a benchmark.
 
 from __future__ import annotations
 
+import json
+import re
+
 import pytest
 
 from flink_wikipedia_spark.plans import REGISTRY
+from flink_wikipedia_spark.plans.window import (
+    FAMILY_ANCHORS,
+    FLAGSHIP,
+    ROUND_CHANGED,
+    WINDOW,
+    load_history,
+    rotate,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -58,64 +69,13 @@ def test_driver_window_covers_every_family():
     """The driver's correctness gate reads only the FIRST 50 registry
     entries (CORRECTNESS_r01 stopped at slot 50) — losing a family from
     the window silently downgrades it to 'untested' in the next round's
-    verdict. Pin the composition.
-
-    NOTE: this test pins the CURRENT round's rotation and is updated in
-    the same commit as plans/__init__._PRIORITY — its job is to catch a
-    registration-order regression between rotations, plus the standing
-    semantic invariant that every operator family keeps at least one
-    in-window representative."""
-    names = list(REGISTRY)[:50]
-    assert names[0] == "q_windowed_edit_size"  # flagship = entry()
-    # Round-15 rotation (tools/rotate_window.py --changed
-    # q_bpe_merges q_bpe_encode q_bpe_vocab — see plans/__init__.py):
-    # the 1 name with no driver record (q_bpe_ids), the 3 names touched
-    # by the ADVICE-r14 persist-leak fix, the TWELVE family anchors,
-    # and the 33 stalest names — the 10 remaining r11-vintage queries
-    # plus 23 r12-vintage ones (alphabetical; the rest of the r12 band
-    # waits for r16).
-    families = {
-        "new_names": ["q_bpe_ids"],
-        "changed": ["q_bpe_encode", "q_bpe_merges", "q_bpe_vocab"],
-        "anchors": ["q_filter_events", "q_json_extract", "q_word_count",
-                    "q_pii_redact", "q_dedup_docs_exact",
-                    "q_multimodal_decode", "q_similarity_lsh",
-                    "q_join_orders_customer", "q_tpch_q1_pricing_summary",
-                    "q_rank_functions", "q_dedup_components",
-                    "q_keyby_agg_edit_size"],
-        "r11_vintage": [
-            "q_tpch_q15_top_supplier", "q_tpch_q20_excess_stock_suppliers",
-            "q_tpch_q22_dormant_accounts", "q_tpch_q2_min_cost_supplier",
-            "q_tpch_q3_shipping_priority", "q_tpch_q5_regional_revenue",
-            "q_tpch_q6_forecast_revenue", "q_tpch_q8_market_share",
-            "q_unpivot_event_daily", "q_vocab_ids",
-        ],
-        "r12_vintage": [
-            "q_ann_ivf", "q_ann_ivfpq_refined", "q_antijoin_inactive_users",
-            "q_approx_distinct_users", "q_approx_percentile_value",
-            "q_c4_quality", "q_collect_user_lists", "q_cube_orders",
-            "q_distinct_users", "q_embedding_neardup_lsh", "q_fingerprint",
-            "q_gopher_quality", "q_hash_sample", "q_having_active_users",
-            "q_ivfpq_search", "q_lang_stats", "q_like_filter_parts",
-            "q_median_value", "q_minhash_dedup_clusters",
-            "q_minhash_signatures", "q_ngram_jaccard_pairs",
-            "q_pagerank_converged", "q_pagerank_parts_suppliers",
-        ],
-    }
-    missing = {
-        fam: [q for q in qs if q not in names]
-        for fam, qs in families.items()
-        if any(q not in names for q in qs)
-    }
-    assert not missing, f"driver-window regression: {missing}"
-    # the groups that define the rotation must union to the full window
-    rotation = {"q_windowed_edit_size"}
-    for fam in families:
-        rotation.update(families[fam])
-    assert rotation == set(names), (
-        f"window/rotation mismatch: extra={set(names) - rotation} "
-        f"unlisted={rotation - set(names)}"
-    )
+    verdict. plans/window.py computes the window at import; these are
+    the policy invariants every computed window must satisfy."""
+    names = list(REGISTRY)[:WINDOW]
+    assert WINDOW == 50 and len(names) == WINDOW
+    assert names[0] == FLAGSHIP == "q_windowed_edit_size"  # flagship = entry()
+    assert [n for n in FAMILY_ANCHORS if n not in names] == []
+    assert [n for n in ROUND_CHANGED if n not in names] == []
     # semantic coverage: every operator family keeps AT LEAST ONE
     # in-window representative each round, whatever the rotation picks
     # (a family regression must never be able to hide behind rotation)
@@ -164,28 +124,42 @@ def test_driver_window_covers_every_family():
     )
 
 
-# The names whose builders changed in the CURRENT round — the
-# rotate_window rule-3 input. Updated each rotation, in the same commit
-# as plans/__init__._PRIORITY.
-ROUND_CHANGED = ["q_bpe_merges", "q_bpe_encode", "q_bpe_vocab"]
+def test_rotate_is_deterministic_for_a_fixed_history(tmp_path):
+    """Slot order on a synthetic registry: flagship, never-passed names,
+    changed names, family anchors, then stalest passing evidence."""
+    fill = [f"q_t{i:02d}" for i in range(45)]
+    names = [*fill, *FAMILY_ANCHORS, FLAGSHIP]
+    passed = {"hash_match": True, "spark_rows": 1, "err": None}
+    # odd fillers last passed in r01, even ones and q_t01 (rows-only)
+    # in r02; q_t43 only ever failed and q_t44 never ran, so both count
+    # as never checked
+    r01 = {n: passed for n in [FLAGSHIP, *FAMILY_ANCHORS, *fill[1:43:2]]}
+    r01["q_t43"] = {"hash_match": False, "spark_rows": 1, "err": None}
+    r02 = {n: passed for n in fill[0:43:2]}
+    r02["q_t01"] = {"hash_match": None, "spark_rows": 3, "err": "no_oracle"}
+    for rnd, rows in (("01", r01), ("02", r02)):
+        (tmp_path / f"CORRECTNESS_r{rnd}.json").write_text(json.dumps(rows))
+
+    window = rotate(names, load_history(tmp_path), ["q_t05", "q_t03"])
+
+    r01_band = [n for n in fill[1:43:2] if n not in ("q_t01", "q_t03", "q_t05")]
+    r02_band = sorted([*fill[0:43:2], "q_t01"])
+    assert window == [
+        FLAGSHIP, "q_t43", "q_t44", "q_t03", "q_t05", *FAMILY_ANCHORS,
+        *r01_band, *r02_band,
+    ][:WINDOW]
 
 
-def test_priority_window_is_rotation_tool_output():
-    """plans/__init__._PRIORITY must be EXACTLY what
-    tools/rotate_window.py computes from the CORRECTNESS_r*.json
-    history + this round's changed-names list — the rotation is
-    mechanical as of r12, and a hand-edited window (or a stale one
-    after the driver writes a new CORRECTNESS file at round start)
-    fails here, forcing the re-rotation the standing policy requires."""
-    import os
-    import sys
+def test_window_without_history_is_valid(tmp_path):
+    window = rotate(list(REGISTRY), load_history(tmp_path), ROUND_CHANGED)
+    assert len(set(window)) == WINDOW and window[0] == FLAGSHIP
+    assert set(window) <= set(REGISTRY)
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(repo))
-    from tools.rotate_window import load_history, load_registry, rotate
 
-    expected = rotate(load_registry(), load_history(repo), ROUND_CHANGED)
-    assert expected == list(REGISTRY)[:50]
+def test_unreadable_history_file_fails_loudly(tmp_path):
+    (tmp_path / "CORRECTNESS_r99.json").write_text('{"q_x": {')
+    with pytest.raises(ValueError, match="CORRECTNESS_r99.json"):
+        load_history(tmp_path)
 
 
 def test_no_oracle_uses_nonportable_decimal_to_double():
@@ -204,7 +178,6 @@ def test_no_oracle_uses_nonportable_decimal_to_double():
     2. aliased: CAST(<ident> AS DOUBLE) where <ident> was assigned from
        SUM(CAST(... AS DECIMAL(>0 scale)...)) earlier in the same oracle
     """
-    import re
 
     def _walk_parens(upper: str, start: int) -> int:
         """Index just past the ')' closing the paren opened before start."""
@@ -290,3 +263,27 @@ def test_q21_single_scan_per_fact(spark):
     plan = _plan(spark, "q_tpch_q21_sole_late_supplier")
     assert plan.count("lineitem.parquet") == 1, "lineitem scanned more than once"
     assert plan.count("orders.parquet") == 1, "orders scanned more than once"
+
+
+def test_q16_lineitem_reaches_count_distinct_without_shuffle(spark):
+    """Q16 regression: COUNT(DISTINCT l_suppkey) already collapses
+    duplicate (partkey, suppkey) pairs, so lineitem flows through the
+    part join into the first partial HashAggregate with no Exchange.
+    Re-adding a pair pre-distinct puts an aggregate and a shuffle of
+    every lineitem pair below the join."""
+    lines = _plan(spark, "q_tpch_q16_supplier_variety").splitlines()
+
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    i = next(k for k, line in enumerate(lines) if "lineitem.parquet" in line)
+    path, d = [], depth(lines[i])  # operators from the scan up to the aggregate
+    for line in reversed(lines[:i]):
+        if depth(line) < d:
+            d = depth(line)
+            path.append(re.match(r"(?:\*\(\d+\) )?(\w+)", line[d:]).group(1))
+            if path[-1] == "HashAggregate":
+                break
+    assert path[-1] == "HashAggregate", path
+    assert any(op.endswith("Join") for op in path), path
+    assert "Exchange" not in path, path

@@ -15,9 +15,10 @@ same ambient:
 Usage:
     python tools/bench_aqe_floor.py SF_DIR [reps] [q_name ...]
 
-Protocol: warm pass per query (not reported), then `reps` interleaved
-rounds — every variant times every query once per round, variants
-rotating inside each round so ambient drift hits all variants equally.
+Protocol: `reps` interleaved rounds — every variant times every query
+once per round, variants rotating inside each round so ambient drift
+hits all variants equally. Each variant's first turn starts with an
+untimed warm pass of every query under that variant's confs.
 Reports per-variant per-query medians + totals as one JSON document.
 """
 
@@ -25,6 +26,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -45,12 +47,6 @@ VARIANTS: dict[str, dict[str, str]] = {
     "init_4xdp_pf_false": {_I: "DP4", _PF: "false"},
     "adv_16m": {_ADV: str(16 * 1024 * 1024)},
 }
-
-
-def median(xs: list[float]) -> float:
-    s = sorted(xs)
-    mid = len(s) // 2
-    return s[mid] if len(s) % 2 else (s[mid - 1] + s[mid]) / 2
 
 
 def main() -> None:
@@ -86,16 +82,17 @@ def main() -> None:
         release_caches()
         return dt
 
-    # warm: codegen + scan paths, outside every timed region
-    for n in names:
-        run_one(n)
-
     samples: dict[str, dict[str, list[float]]] = {
         v: {n: [] for n in names} for v in VARIANTS
     }
-    for _ in range(reps):
+    for rep in range(reps):
         for vname, conf in VARIANTS.items():
             set_variant(conf)
+            if rep == 0:
+                # warm under THIS variant's confs, untimed: codegen, scan
+                # paths and its first AQE stages at its partition counts
+                for n in names:
+                    run_one(n)
             for n in names:
                 samples[vname][n].append(run_one(n))
     set_variant({})
@@ -109,7 +106,7 @@ def main() -> None:
         "variants": {},
     }
     for vname in VARIANTS:
-        per_q = {n: round(median(xs), 3) for n, xs in samples[vname].items()}
+        per_q = {n: round(statistics.median(xs), 3) for n, xs in samples[vname].items()}
         out["variants"][vname] = {
             "total": round(sum(per_q.values()), 3),
             "queries": per_q,
