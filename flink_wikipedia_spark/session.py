@@ -21,6 +21,15 @@ large cluster up front:
   (keeps hundreds, bounding per-task sort/join state) with zero knobs.
   ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` pins an exact static count when a
   deployment needs one.
+- **Streaming checkpoints through FileSystemBasedCheckpointFileManager**
+  — Spark's default FileContext-based manager forks a ``readlink``
+  process for every checkpoint file it renames when the native Hadoop
+  library is absent (offsets, commits, one state delta per state
+  partition per trigger). The FileSystem-based manager keeps the same
+  no-overwrite guarantee without the fork: JFR forks per flagship
+  trigger 85 → 26 at 2 state partitions, none of them ``readlink``;
+  ``perfbench`` stream-flagship wall 5.87 → 4.67 s (median of 10
+  interleaved pairs on 2 pinned CPUs of a 4-vCPU VM, 10/10 pairs won).
 """
 
 from __future__ import annotations
@@ -203,6 +212,28 @@ def get_spark(
         # query's build shrinks). Pure driver-side overhead, zero effect
         # on results or executed plans at any scale.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # --- streaming checkpoints ---
+        # Every trigger renames an offsets WAL entry, a commit-log entry
+        # and one state delta per state partition into place. Spark's
+        # default FileContext-based manager renames through
+        # ChecksumFs.renameInternal, whose getFileLinkStatus(dst) forks a
+        # `readlink` process per file wherever the native Hadoop library
+        # is absent. JFR on the flagship stream with 2 state partitions
+        # counted 85 process forks per trigger, 59 of them `readlink`,
+        # and each extra state partition adds ~21 (16 `readlink`); with
+        # this manager 26 remain, ~5 per state partition, all `chmod`
+        # from file creates, and none is `readlink`. The guarantee is the
+        # same: on file: both managers check the destination then rename
+        # (exists(dst) + rename here), so a second createAtomic(p,
+        # overwrite=false) still fails and leaves the first file intact;
+        # HDFS rename refuses an existing destination; Hadoop .crc files
+        # and Spark's own state-file checksums are still written
+        # (ChecksumCheckpointFileManager wraps whichever manager is set).
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         # events.ts unit handling (NANOS vs MICROS) lives in
         # schemas.load_table, which sniffs the parquet footer and sets
         # spark.sql.legacy.parquet.nanosAsLong only for NANOS files

@@ -63,6 +63,13 @@ class RetrySink:
     idempotent/upsert-keyed (ParquetSink / UpsertParquetSink)."""
 
     def __init__(self, inner, max_retries: int = 3, backoff_s: float = 0.5) -> None:
+        # a negative count would skip every attempt and reach ``raise
+        # None``; a negative backoff makes time.sleep raise mid-retry
+        if max_retries < 0 or backoff_s < 0:
+            raise ValueError(
+                f"RetrySink: max_retries={max_retries!r} and "
+                f"backoff_s={backoff_s!r} must both be >= 0"
+            )
         self.inner = inner
         self.max_retries = max_retries
         self.backoff_s = backoff_s

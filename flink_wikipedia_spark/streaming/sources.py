@@ -23,6 +23,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+def _admission_limit(name: str, limit: int | None) -> str | None:
+    """A per-trigger admission limit as its option string, or None for
+    unbounded. Only ``None`` means unbounded: a limit of 0 is an error,
+    never a silent whole-backlog batch."""
+    if limit is None:
+        return None
+    if limit <= 0:
+        raise ValueError(f"{name}={limit!r}: expected a positive count or None")
+    return str(limit)
+
+
 def kafka_options(
     brokers: str,
     topic: str = "wikipedia-events",
@@ -42,8 +53,9 @@ def kafka_options(
         "subscribe": topic,
         "startingOffsets": starting_offsets,
     }
-    if max_offsets_per_trigger:
-        opts["maxOffsetsPerTrigger"] = str(max_offsets_per_trigger)
+    limit = _admission_limit("max_offsets_per_trigger", max_offsets_per_trigger)
+    if limit is not None:
+        opts["maxOffsetsPerTrigger"] = limit
     return opts
 
 
@@ -82,9 +94,10 @@ def socket_source(spark: SparkSession, host: str = "localhost", port: int = 9999
 def file_source(spark: SparkSession, path: str, max_files_per_trigger: int | None = None) -> DataFrame:
     """Directory of JSON-lines text files — the replayable test twin of
     the Kafka source (each line = one event payload)."""
+    limit = _admission_limit("max_files_per_trigger", max_files_per_trigger)
     reader = spark.readStream.format("text")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    if limit is not None:
+        reader = reader.option("maxFilesPerTrigger", limit)
     return reader.load(path).select(F.col("value").alias("value"))
 
 

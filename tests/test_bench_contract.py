@@ -34,6 +34,7 @@ def _full_payload(per_query: dict[str, float]) -> dict:
         "host_cpus": 32,
         "stream_events": 10000,
         "stream_events_per_sec": 39000.0,
+        "stream_trigger_ms": bench.trigger_phase_ms(_progress()),
         "skew_join": {
             "hot_key_fraction": 0.99,
             "fact_fanout": 50,
@@ -47,6 +48,22 @@ def _full_payload(per_query: dict[str, float]) -> dict:
         "queries_shuffle_read_mb": {k: 56.789 for k in per_query},
         "queries_spill_disk_mb": {},
     }
+
+
+def _progress() -> list[dict]:
+    # three triggers shaped like StreamingQueryProgress: the first has
+    # no state operator yet and skips queryPlanning
+    def trigger(i: int, state: bool) -> dict:
+        d = {k: 10 * i + j for j, k in enumerate(bench.TRIGGER_PHASES)}
+        if i == 0:
+            del d["queryPlanning"]
+        return {
+            "batchId": i,
+            "durationMs": d,
+            "stateOperators": [{"commitTimeMs": 5 * i}] if state else [],
+        }
+
+    return [trigger(0, False), trigger(1, True), trigger(2, True)]
 
 
 def _registry_walls() -> dict[str, float]:
@@ -116,3 +133,20 @@ def test_compact_budget_holds_for_pathological_strings():
         line = bench.compact_payload(full, budget=budget)
         assert len(line) <= budget
         json.loads(line)  # still one parseable JSON object
+
+
+def test_stream_trigger_phases_ride_the_full_payload_only():
+    full = _full_payload(_registry_walls())
+    assert full["stream_trigger_ms"] == {
+        "latestOffset": 10,  # median of 0, 10, 20
+        "queryPlanning": 16,  # median of 11, 21: trigger 0 lacks it
+        "addBatch": 12,
+        "walCommit": 13,
+        "commitOffsets": 14,
+        "triggerExecution": 15,
+        "stateCommit": 7.5,  # median of 5, 10: trigger 0 has no state
+    }
+    assert bench.trigger_phase_ms([])["triggerExecution"] is None
+    d = json.loads(bench.compact_payload(full))
+    assert "stream_trigger_ms" not in d
+    assert d["stream_events_per_sec"] == 39000.0

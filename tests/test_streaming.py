@@ -305,6 +305,15 @@ def test_retry_sink_retries_then_succeeds_and_propagates(spark):
         RetrySink(always_broken, max_retries=2, backoff_s=0.01)(df, 0)
 
 
+@pytest.mark.parametrize("kwargs", [{"max_retries": -1}, {"backoff_s": -0.1}])
+def test_retry_sink_rejects_negative_settings(kwargs):
+    from flink_wikipedia_spark.streaming.sinks import RetrySink
+
+    # max_retries=-1 would skip every attempt and then `raise None`
+    with pytest.raises(ValueError, match="must both be >= 0"):
+        RetrySink(lambda df, epoch: None, **kwargs)
+
+
 def test_streaming_session_windows(spark, tmp_path):
     """session_window in a LIVE stream: 5-min gap sessions finalize
     once the watermark passes (availableNow over two files)."""
@@ -415,6 +424,11 @@ def test_kafka_source_options_contract(spark):
     )
     assert opts["startingOffsets"] == "earliest"
     assert "maxOffsetsPerTrigger" not in opts
+
+    # a zero or negative limit is an error, not "unbounded"
+    for bad in (0, -5):
+        with pytest.raises(ValueError, match="max_offsets_per_trigger"):
+            kafka_options("b:9092", max_offsets_per_trigger=bad)
 
     # .load() must reach Spark's source resolution and fail on the
     # missing connector jar — not on our option plumbing.
@@ -795,3 +809,43 @@ def test_flagship_kill_and_resume_matches_batch(spark, tmp_path):
     assert len(want) == 8  # 4 windows x 2 domains
     # the kill really happened mid-stream (deterministically, epoch 3)
     assert killed_after == 3, killed_after
+
+
+def test_file_source_rejects_non_positive_admission_limit(spark, tmp_path):
+    # 0 must not pass for "unbounded" and read every file in one
+    # batch; only None means unbounded
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="max_files_per_trigger"):
+            file_source(spark, str(tmp_path), max_files_per_trigger=bad)
+    assert file_source(spark, str(tmp_path), max_files_per_trigger=None).isStreaming
+
+
+def test_checkpoint_manager_is_filesystem_based_and_never_overwrites(spark, tmp_path):
+    """get_spark pins FileSystemBasedCheckpointFileManager (no `readlink`
+    fork per renamed checkpoint file). The class name is internal to
+    Spark, so an upgrade that moves it fails here first. The offset and
+    commit logs rely on createAtomic(overwrite=false) refusing to
+    replace a committed file; pin that on the manager actually used."""
+    from py4j.protocol import Py4JJavaError
+
+    jvm = spark._jvm
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)), hadoop_conf
+    )
+    assert manager.getClass().getName() == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+
+    path = jvm.org.apache.hadoop.fs.Path(str(tmp_path / "0"))
+
+    def write(data: bytes) -> None:
+        out = manager.createAtomic(path, False)
+        out.write(bytearray(data))
+        out.close()
+
+    write(b"first")
+    with pytest.raises(Py4JJavaError):
+        write(b"second")
+    assert (tmp_path / "0").read_bytes() == b"first"
