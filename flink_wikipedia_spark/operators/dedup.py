@@ -23,6 +23,7 @@ from flink_wikipedia_spark.functions.constants import (
     HM_MOD,
     MINHASH_A,
     MINHASH_B,
+    MINHASH_BANDS,
     MINHASH_NUM_HASHES,
     MINHASH_P,
     MINHASH_ROWS_PER_BAND,
@@ -44,6 +45,16 @@ def _doc_tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
+def _hm_sql(token: str) -> str:
+    """``stable_token_hash(token) % HM_MOD`` as Spark-SQL text."""
+    return f"CAST(conv(substring(md5({token}), 1, 15), 16, 10) AS BIGINT) % {HM_MOD}"
+
+
+def _hms_sql(text_col: str) -> str:
+    """A text's non-empty token hashes (``_hm_sql``) as a Spark-SQL array."""
+    return f"transform(filter(split(lower({text_col}), ' '), t -> t != ''), t -> {_hm_sql('t')})"
+
+
 def minhash_signatures(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """MinHash signature per document: sig_i = min over tokens of
     (A[i]·hm + B[i]) mod P, i < 8.
@@ -54,30 +65,38 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id", text_col: str = "t
     straight into the groupBy's map-side partial min; set semantics
     still hold because min over a multiset equals min over its support.
     (Jaccard keeps _doc_tokens — intersection/union sizes DO need
-    distinct.)"""
+    distinct.)
+
+    Built from Spark-SQL strings (the :func:`minhash_sig_cols`
+    rationale: one py4j round trip per expression instead of one per
+    DSL node; the optimized plan is identical). ``id_col`` and
+    ``text_col`` are spliced verbatim, so they follow the same
+    backquoting contract."""
     toks = (
-        df.select(
-            F.col(id_col),
-            F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("token"),
-        )
-        .filter(F.col("token") != "")
-        .select(id_col, (stable_token_hash("token") % HM_MOD).alias("hm"))
+        df.selectExpr(id_col, f"explode(split(lower({text_col}), ' ')) AS token")
+        .where("token != ''")
+        .selectExpr(id_col, f"{_hm_sql('token')} AS hm")
     )
-    aggs = [
-        F.min((F.col("hm") * MINHASH_A[i] + MINHASH_B[i]) % MINHASH_P).alias(f"sig_{i}")
-        for i in range(MINHASH_NUM_HASHES)
-    ]
-    return toks.groupBy(id_col).agg(*aggs)
+    return toks.groupBy(id_col).agg(
+        *[
+            F.expr(f"min((hm * {MINHASH_A[i]} + {MINHASH_B[i]}) % {MINHASH_P}) AS sig_{i}")
+            for i in range(MINHASH_NUM_HASHES)
+        ]
+    )
+
+
+def _band_sql(band: int) -> str:
+    """One band's bucket key as SQL text, valid in Spark and DuckDB."""
+    lo = band * MINHASH_ROWS_PER_BAND
+    cols = ", ".join(f"sig_{i}" for i in range(lo, lo + MINHASH_ROWS_PER_BAND))
+    return f"md5(concat_ws('_', {cols}))"
 
 
 def minhash_band_col(band: int) -> Column:
     """Collapse one band (ROWS_PER_BAND signature slots) into a single
     bucket key: md5 of the '_'-joined slots (strings sidestep int64
     overflow for r > 2 and are engine-portable)."""
-    lo = band * MINHASH_ROWS_PER_BAND
-    return F.md5(
-        F.concat_ws("_", *[F.col(f"sig_{i}") for i in range(lo, lo + MINHASH_ROWS_PER_BAND)])
-    )
+    return F.expr(_band_sql(band))
 
 
 def minhash_sig_cols(text_col: str = "text") -> list[Column]:
@@ -104,14 +123,9 @@ def minhash_sig_cols(text_col: str = "text") -> list[Column]:
     it must be a bare identifier or a SQL fragment; a column name with
     spaces, dashes or a reserved word must be backquoted by the caller
     (`my text`), as in any spark.sql text."""
-    hms_sql = (
-        f"transform(filter(split(lower({text_col}), ' '), t -> t != ''), "
-        f"t -> CAST(conv(substring(md5(t), 1, 15), 16, 10) AS BIGINT) "
-        f"% {HM_MOD})"
-    )
     return [
         F.expr(
-            f"array_min(transform({hms_sql}, "
+            f"array_min(transform({_hms_sql(text_col)}, "
             f"h -> (h * {MINHASH_A[i]} + {MINHASH_B[i]}) % {MINHASH_P}))"
         ).alias(f"sig_{i}")
         for i in range(MINHASH_NUM_HASHES)
@@ -122,22 +136,13 @@ MAX_BUCKET_FOR_PAIRS = 64
 
 
 def _band_rows(sigs: DataFrame, id_col: str) -> DataFrame:
-    from flink_wikipedia_spark.functions.constants import MINHASH_BANDS
-
-    return sigs.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        minhash_band_col(b).alias("bucket"),
-                    )
-                    for b in range(MINHASH_BANDS)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, "bb.band", "bb.bucket")
+    """(id, band, bucket): one row per document and band."""
+    buckets = ", ".join(
+        f"named_struct('band', {b}, 'bucket', {_band_sql(b)})" for b in range(MINHASH_BANDS)
+    )
+    return sigs.selectExpr(id_col, f"explode(array({buckets})) AS bb").selectExpr(
+        id_col, "bb.band", "bb.bucket"
+    )
 
 
 def minhash_candidate_pairs(
@@ -158,27 +163,18 @@ def minhash_candidate_pairs(
     (collect the ≤64 sorted ids, expand combinations with array
     higher-order functions) — one shuffle on (band, bucket), no
     self-join, no second scan of the signature subtree."""
-    bands = _band_rows(sigs, id_col)
-    grouped = (
-        bands.groupBy("band", "bucket")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("_ids"))
-        .filter(F.size("_ids").between(2, max_bucket))
-    )
-    n = F.size(F.col("_ids"))
-    pairs = F.flatten(
-        F.transform(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: F.transform(
-                F.slice(F.col("_ids"), i + 1, n - i),
-                lambda b: F.struct(
-                    F.get(F.col("_ids"), i - 1).alias("doc_a"), b.alias("doc_b")
-                ),
-            ),
-        )
+    pairs = (
+        "flatten(transform(sequence(1, size(_ids) - 1), i -> transform("
+        "slice(_ids, i + 1, size(_ids) - i), "
+        "b -> named_struct('doc_a', get(_ids, i - 1), 'doc_b', b))))"
     )
     return (
-        grouped.select(F.explode(pairs).alias("p"))
-        .select("p.doc_a", "p.doc_b")
+        _band_rows(sigs, id_col)
+        .groupBy("band", "bucket")
+        .agg(F.expr(f"sort_array(collect_list({id_col})) AS _ids"))
+        .where(f"size(_ids) BETWEEN 2 AND {max_bucket}")
+        .selectExpr(f"explode({pairs}) AS p")
+        .selectExpr("p.doc_a", "p.doc_b")
         .distinct()
     )
 
@@ -188,14 +184,12 @@ def minhash_dedup_clusters(sigs: DataFrame, id_col: str = "doc_id") -> DataFrame
     near-dup cluster; keep min(doc_id), count the rest. Linear in corpus
     size regardless of cluster fan-out — the 100 TB companion to the
     pair view."""
-    bands = _band_rows(sigs, id_col).filter(F.col("band") == 0)
     return (
-        bands.groupBy("bucket")
-        .agg(
-            F.min(id_col).alias("keeper_doc_id"),
-            F.count(F.lit(1)).alias("n_members"),
-        )
-        .filter(F.col("n_members") >= 2)
+        _band_rows(sigs, id_col)
+        .where("band = 0")
+        .groupBy("bucket")
+        .agg(F.expr(f"min({id_col}) AS keeper_doc_id"), F.expr("count(1) AS n_members"))
+        .where("n_members >= 2")
     )
 
 
@@ -222,15 +216,8 @@ def sql_minhash_signatures_duckdb(table: str = "documents",
 
 def _sql_band_rows(id_col: str) -> str:
     """Band rows over a CTE named ``sigs`` (callers define it)."""
-    from flink_wikipedia_spark.functions.constants import MINHASH_BANDS
-
-    def band_expr(b: int) -> str:
-        lo = b * MINHASH_ROWS_PER_BAND
-        cols = ", ".join(f"sig_{i}" for i in range(lo, lo + MINHASH_ROWS_PER_BAND))
-        return f"md5(concat_ws('_', {cols}))"
-
     return " UNION ALL ".join(
-        f"SELECT {id_col}, {b} AS band, {band_expr(b)} AS bucket FROM sigs"
+        f"SELECT {id_col}, {b} AS band, {_band_sql(b)} AS bucket FROM sigs"
         for b in range(MINHASH_BANDS)
     )
 
@@ -287,17 +274,13 @@ def simhash_fingerprints(df: DataFrame, id_col: str = "doc_id", text_col: str = 
     # trips ≈ 0.5 s of driver wall per plan build (the lsh_bucket_expr
     # string-branch rationale; identical Catalyst tree, bit-identical
     # results — pinned by the oracle gate and tests/test_operators.py).
-    hms_sql = (
-        f"transform(filter(split(lower({text_col}), ' '), t -> t != ''), "
-        f"t -> CAST(conv(substring(md5(t), 1, 15), 16, 10) AS BIGINT) "
-        f"% {HM_MOD})"
-    )
+
     # token-less docs emit nothing (parity with the groupBy form); the
     # guard is a cheap string predicate — a size(_hms) > 0 filter gets
     # predicate-pushed below the projection and recomputes the whole
     # md5 transform per row (the explode-filter trap, see memory)
     with_hms = df.filter(F.trim(F.col(text_col)) != "").select(
-        F.col(id_col), F.expr(hms_sql).alias("_hms")
+        F.col(id_col), F.expr(_hms_sql(text_col)).alias("_hms")
     )
     fp_terms = ["CAST(0 AS BIGINT)"]
     for j in range(SIMHASH_BITS):

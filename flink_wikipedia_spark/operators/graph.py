@@ -39,8 +39,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-# Below this edge count the component graph fits comfortably on the
-# driver (~tens of MB) and union-find beats the distributed loop's
+# At or below this many DIRECTED edges (2 × input pairs: the count the
+# distributed loops iterate over) the component graph fits comfortably
+# on the driver (~tens of MB) and union-find beats the distributed loop's
 # per-iteration job-scheduling floor by ~10x. Near-dup graphs after LSH
 # candidate filtering are orders of magnitude smaller than the corpus
 # (only docs in some candidate pair appear), so even at 100 TB corpus
@@ -49,10 +50,10 @@ from pyspark.sql import functions as F
 SMALL_GRAPH_EDGES = 1_000_000
 
 
-def _unionfind_components(rows) -> list:
-    """Driver-side union-find with path compression over a collected
-    edge list; labels each node with the min member of its component
-    (same contract as the distributed loop)."""
+def _unionfind_components(pairs) -> list:
+    """Driver-side union-find with path compression over (u, v) pairs,
+    one direction each; labels each node with the min member of its
+    component (same contract as the distributed loop)."""
     parent: dict = {}
 
     def find(x):
@@ -63,7 +64,7 @@ def _unionfind_components(rows) -> list:
             parent[x], x = root, parent[x]
         return root
 
-    for u, v in rows:
+    for u, v in pairs:
         if u not in parent:
             parent[u] = u
         if v not in parent:
@@ -111,48 +112,51 @@ def connected_components(
     edges: undirected pair list (each pair once is fine — both
     directions are added internally).
 
-    Scale-adaptive: counts the (already materialized) edge list first;
-    small graphs are solved with driver union-find in one collect, large
-    graphs fall through to a distributed loop. The count is ~free (it
-    reads the checkpointed blocks) and the decision is a bounded-memory
-    guard, not a hope — the distributed paths stay fully tested (see
+    Scale-adaptive: materializes the edge list once, ONE direction
+    only, then probes it with a bounded ``limit``. A graph whose
+    directed edge count (2 × input rows) is at most
+    ``small_graph_edges`` is solved with driver union-find over that
+    probe; larger graphs fall through to a distributed loop over the
+    checkpoint unioned with its mirror. The guard bounds driver memory
+    — the distributed paths stay fully tested (see
     tests/test_operators.py) and kick in automatically.
 
     algorithm: "auto" (degree probe, see module docstring), "minlabel",
-    or "star" (large-star/small-star). Every variant produces identical
+    or "star" (large-star/small-star); anything else raises ValueError
+    before any Spark job runs. Every variant produces identical
     (node, component) labels — pinned by tests/test_operators.py.
     """
-    fwd = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    und = fwd.union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
+    if algorithm not in ("auto", "minlabel", "star"):
+        raise ValueError(
+            f"algorithm must be 'auto', 'minlabel' or 'star', got {algorithm!r}"
+        )
     # materialize the edge list ONCE: the loop reads it every iteration,
     # and an unmaterialized plan would re-run the (possibly expensive)
-    # upstream candidate-generation pipeline per iteration
-    und = und.localCheckpoint()
-    # Size probe and small-graph collect in ONE job: a bounded
-    # limit(guard+1) over the checkpointed blocks either returns the
-    # whole edge list (≤ guard ⇒ it IS the collect the union-find
-    # needs) or proves the graph is large while moving at most guard+1
-    # rows — where count-then-collect paid two scheduler round-trips
-    # for the same information. Driver memory stays bounded either way.
-    probe = und.limit(small_graph_edges + 1).collect()
-    if len(probe) <= small_graph_edges:
-        spark = und.sparkSession
-        labeled = _unionfind_components([(r.u, r.v) for r in probe])
-        from pyspark.sql.types import StructField, StructType
-
+    # upstream candidate-generation pipeline per iteration. One
+    # direction suffices: union-find needs no mirror, and the loops
+    # mirror the checkpoint lazily.
+    fwd = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint()
+    und = fwd.union(fwd.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    # Size probe and small-graph collect in ONE job: a bounded limit
+    # over the checkpointed blocks either returns the whole edge list
+    # (≤ guard directed edges ⇒ it IS the input union-find needs) or
+    # proves the graph is large while moving at most guard/2+1 rows.
+    probe = fwd.limit(small_graph_edges // 2 + 1).toArrow()
+    if 2 * probe.num_rows <= small_graph_edges:
+        labeled = _unionfind_components(
+            zip(probe.column("u").to_pylist(), probe.column("v").to_pylist())
+        )
         from flink_wikipedia_spark.functions.compat import arrow_local_df
 
-        schema = StructType(
-            [
-                StructField("node", und.schema["u"].dataType),
-                StructField("component", und.schema["u"].dataType),
-            ]
-        )
+        # the mirror's type: mixed src/dst types widen as in the loops
+        t = und.schema["u"].dataType.simpleString()
         # Arrow transport, not pickled rows: the labeled list can be
         # ~10^6 nodes at the guard ceiling, and the pickled-RDD path
         # additionally spawns a Python worker per downstream task just
         # to unpickle it (see arrow_local_df).
-        return arrow_local_df(spark, labeled, schema, ["node", "component"])
+        return arrow_local_df(
+            und.sparkSession, labeled, f"node {t}, component {t}", ["node", "component"]
+        )
     del probe
     if algorithm == "auto":
         # the probe costs one O(|E|) aggregate — ~one round of either
@@ -219,10 +223,12 @@ def sql_components_duckdb(rounds: int = 24) -> str:
 
 
 def _minlabel_components(und: DataFrame, max_iter: int) -> DataFrame:
-    """Min-label propagation with pointer jumping over a checkpointed
-    undirected edge list (both directions present). See module
+    """Min-label propagation with pointer jumping over an undirected
+    edge list read from a checkpoint (both directions present). See module
     docstring; convergence detection rides the materialization job via
-    ``observe`` so each round costs exactly one job."""
+    ``observe`` so each round costs exactly one job. Labels still
+    changing after ``max_iter`` rounds raise RuntimeError: they are not
+    components yet."""
     from pyspark.sql import Observation
 
     labels = (
@@ -297,8 +303,11 @@ def _minlabel_components(und: DataFrame, max_iter: int) -> DataFrame:
         observed.count()
         labels = new_labels.select("node", "component")
         if obs.get["changed"] == 0:
-            break
-    return labels
+            return labels
+    raise RuntimeError(
+        f"min-label propagation did not reach a fixed point within "
+        f"max_iter={max_iter} rounds; rerun with a larger max_iter"
+    )
 
 
 # Below this edge count the degreed edge list fits comfortably on the

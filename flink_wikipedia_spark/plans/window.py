@@ -51,6 +51,12 @@ FAMILY_ANCHORS = (
 # no passing record in it. Update it in the commit that changes a
 # builder.
 ROUND_CHANGED: tuple[str, ...] = (
+    "q_dedup_canonical",            # components checkpoint one direction
+    "q_dedup_components",           # components checkpoint one direction
+    "q_dedup_pipeline",             # MinHash candidate plan as SQL strings
+    "q_minhash_dedup_clusters",     # MinHash band rows as SQL strings
+    "q_minhash_dedup_pairs",        # MinHash candidate plan as SQL strings
+    "q_minhash_signatures",         # MinHash signatures as SQL strings
     "q_pq_codes",                   # code argmin/pack as SQL strings
     "q_semantic_dedup",             # ivf_assign projection as a SQL string
     "q_tfidf_top_terms",            # scan spread reverted to load_table

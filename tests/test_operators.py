@@ -216,6 +216,66 @@ def test_connected_components_star_variant(spark):
     assert labels(hub, algorithm="star") == expected
 
 
+def test_connected_components_awkward_edge_list(spark):
+    """Duplicate pairs, both orientations of a pair, a self-loop and an
+    isolated pair: the driver path and both distributed loops (which
+    mirror the one checkpointed direction) must give the same labels."""
+    from flink_wikipedia_spark.operators.graph import connected_components
+
+    edges = spark.createDataFrame(
+        [(1, 2), (1, 2), (2, 1), (3, 2), (5, 5), (8, 7)], "doc_a long, doc_b long"
+    )
+    expected = {1: 1, 2: 1, 3: 1, 5: 5, 7: 7, 8: 7}
+
+    def labels(**kw):
+        return {r.node: r.component for r in connected_components(edges, **kw).collect()}
+
+    assert labels() == expected
+    assert labels(small_graph_edges=0, algorithm="minlabel") == expected
+    assert labels(small_graph_edges=0, algorithm="star") == expected
+
+
+def test_connected_components_guard_counts_directed_edges(spark):
+    """The driver path (a local relation) takes a graph iff 2 × its pair
+    count is within ``small_graph_edges``; both sides of that line give
+    the same labels."""
+    from flink_wikipedia_spark.operators.graph import connected_components
+
+    edges = spark.createDataFrame([(1, 2), (2, 3), (4, 5)], "doc_a long, doc_b long")
+    expected = {1: 1, 2: 1, 3: 1, 4: 4, 5: 4}
+    for guard, on_driver in ((5, False), (6, True)):  # 6 directed edges
+        got = connected_components(edges, small_graph_edges=guard, algorithm="minlabel")
+        assert got.isLocal() == on_driver
+        assert {r.node: r.component for r in got.collect()} == expected
+
+
+def test_minlabel_budget_exhausted_raises(spark):
+    """Labels still changing at ``max_iter`` are not components: a
+    128-node chain needs more than one min-label round."""
+    from flink_wikipedia_spark.operators.graph import connected_components
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(127)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        connected_components(
+            chain, small_graph_edges=0, algorithm="minlabel", max_iter=1
+        ).collect()
+
+
+def test_connected_components_rejects_unknown_algorithm(spark):
+    """An unknown algorithm raises before any Spark job: evaluating this
+    edge list would fail with a Spark error, not ValueError."""
+    from flink_wikipedia_spark.operators.graph import connected_components
+
+    poisoned = spark.range(2).select(
+        F.col("id").alias("doc_a"),
+        F.raise_error(F.lit("edge list evaluated")).cast("long").alias("doc_b"),
+    )
+    with pytest.raises(ValueError, match="bogus"):
+        connected_components(poisoned, algorithm="bogus")
+
+
 def test_map_fold_multikey(spark):
     """q_map_functions' oracle exploits the dataset's single-key props;
     this pins the generic map_values fold on a multi-key map."""
