@@ -10,6 +10,9 @@ source/sink endpoints differ (SURVEY.md §3.4):
     pipeline.py  build_pipeline(spark, source_df, sink) — the injection
                  seam the reference exposes but never uses
                  (DataStreamJob.java:49)
+    stateful.py  the one custom-state hook (bucketed
+                 applyInPandasWithState running totals) and the
+                 stream-stream interval join
 """
 
 from flink_wikipedia_spark.streaming.pipeline import build_flagship_stream

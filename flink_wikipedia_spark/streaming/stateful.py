@@ -1,22 +1,26 @@
-"""Custom stateful streaming operators via applyInPandasWithState —
-the generalization of the reference's WindowFunction shape
-(``DataStreamJob.java:93-108``: user code + per-key managed state).
-SURVEY.md §4.3(3): nothing in the inventory *needs* this (every
+"""Custom stateful streaming: the one applyInPandasWithState hook, and
+the stream-stream interval join.
+
+applyInPandasWithState generalizes the reference's WindowFunction
+shape (``DataStreamJob.java:93-108``: user code + per-key managed
+state). SURVEY.md §4.3(3): nothing in the inventory *needs* it (every
 inventoried aggregate compiles to native operators, which is always
 preferable); the hook exists for semantics Spark's aggregates can't
 express — per-key session machines, custom eviction, cross-event
-pattern state.
+pattern state. ``running_domain_totals_bucketed`` is that hook, kept
+runnable and pinned equal to its native ``groupBy("domain")`` twin.
 
 Scale notes: state lives in the state store (RocksDB per session.py —
-disk-backed, checkpointed); each key's state must stay O(1)-ish, which
-``running_domain_totals`` respects (two counters per key). Arrow moves
-grouped batches; the Python worker sees one key's rows per call.
+disk-backed, checkpointed). The hook groups on a hash bucket, not on
+the key: Arrow moves one bucket's rows per call, and each bucket's
+state holds its keys' counters (two per key).
 """
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
-from typing import Any
+from urllib.parse import unquote, urlsplit
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -26,38 +30,6 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 _log = __import__("logging").getLogger(__name__)
 
 RUNNING_TOTALS_SCHEMA = "domain string, n_edits long, total_edit_size long"
-_STATE_SCHEMA = "n long, s long"
-
-
-def _update_totals(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    n, s = state.get if state.exists else (0, 0)
-    for pdf in pdfs:
-        n += len(pdf)
-        s += int((pdf["new_length"] - pdf["old_length"]).abs().sum())
-    state.update((n, s))
-    yield pd.DataFrame(
-        {"domain": [key[0]], "n_edits": [n], "total_edit_size": [s]}
-    )
-
-
-def running_domain_totals(decoded: DataFrame) -> DataFrame:
-    """Per-domain lifetime counters, one updated row per key per batch —
-    a custom stateful op the windowed aggregate can't express (state
-    never expires; output cadence = trigger cadence)."""
-    return (
-        decoded.select("domain", "old_length", "new_length")
-        .groupBy("domain")
-        .applyInPandasWithState(
-            _update_totals,
-            RUNNING_TOTALS_SCHEMA,
-            _STATE_SCHEMA,
-            "update",
-            GroupStateTimeout.NoTimeout,
-        )
-    )
-
 
 BUCKETED_STATE_SCHEMA = (
     "domains array<string>, ns array<long>, ss array<long>"
@@ -78,12 +50,12 @@ def _update_totals_bucketed(
     else:
         totals = {}
     batch = pd.concat(list(pdfs), ignore_index=True)
-    # count rows with `size` (counts ALL rows, matching the per-key
-    # operator's len(pdf) — pandas `count` would skip rows whose
-    # lengths decoded to null), sum with NaN-skip (matching .sum())
+    # count rows with `size` (counts ALL rows, matching Spark's
+    # count(*) — pandas `count` would skip rows whose lengths decoded
+    # to null), sum with NaN-skip (Spark's sum skips nulls too)
     sizes = (batch["new_length"] - batch["old_length"]).abs()
     # dropna=False: Spark gives a null key its own group, so the
-    # per-key operator emits a row for it — match that here
+    # native aggregate emits a row for it — match that here
     grouped = sizes.groupby(batch["domain"], dropna=False)
     agg = pd.DataFrame({"n": grouped.size(), "s": grouped.sum()})
     out_d, out_n, out_s = [], [], []
@@ -127,6 +99,15 @@ def default_bucket_count(cores: int, est_keys: int | None = None) -> int:
     return 1 << (raw - 1).bit_length()
 
 
+def _require_positive(buckets: int) -> int:
+    # pmod by 0 fails the first executed batch (REMAINDER_BY_ZERO under
+    # ANSI) after the query has started, and a negative modulus yields
+    # negative bucket ids — refuse both before any Spark job runs
+    if buckets < 1:
+        raise ValueError(f"bucket count must be >= 1, got {buckets}")
+    return buckets
+
+
 def resolve_bucket_count(
     df: DataFrame,
     buckets: int | None,
@@ -138,9 +119,10 @@ def resolve_bucket_count(
     differs across restarts of a checkpointed query re-shards state
     incorrectly — pmod over a different modulus — so the derivation
     must at least be visible in driver logs; validate_bucket_count
-    makes a mismatch fail loudly)."""
+    makes a mismatch fail loudly). An explicit count below 1 raises
+    ValueError."""
     if buckets is not None:
-        return buckets
+        return _require_positive(buckets)
     derived = default_bucket_count(
         df.sparkSession.sparkContext.defaultParallelism, est_keys
     )
@@ -158,25 +140,46 @@ def resolve_bucket_count(
     return derived
 
 
+def _local_checkpoint_dir(checkpoint_dir: str) -> str:
+    """The local path of a checkpoint location: a plain path as given, a
+    ``file:`` URI as its path. Any other scheme raises — the sidecar is
+    written with local file I/O, and under a remote scheme it would land
+    in a directory named after the URI below the working directory,
+    nowhere near Spark's checkpoint."""
+    uri = urlsplit(checkpoint_dir)
+    if not uri.scheme:
+        return checkpoint_dir
+    if uri.scheme == "file" and uri.netloc in ("", "localhost"):
+        return unquote(uri.path)
+    raise ValueError(
+        "validate_bucket_count writes its sidecar to the local "
+        f"filesystem and cannot pin a count for {checkpoint_dir!r}: pass "
+        "a local path or a file: URI, or for a remote checkpoint pass the "
+        "same explicit buckets= on every restart."
+    )
+
+
 def validate_bucket_count(checkpoint_dir: str, buckets: int) -> int:
     """Pin a bucketed operator's bucket count to its checkpoint
     (ADVICE r11): on first use writes a ``_bucket_count`` sidecar next
     to Spark's checkpoint data; on restart a mismatched count raises
     instead of silently corrupting state (pmod over a different
     modulus scatters each key's history across buckets). Returns the
-    validated count. Call it with the SAME dir passed as
-    checkpointLocation, before starting the query::
+    validated count. Call it with the SAME location passed as
+    checkpointLocation (a local path or a ``file:`` URI), before
+    starting the query::
 
         buckets = validate_bucket_count(ckpt, buckets)
-        q = sessionize_with_timers_bucketed(src, buckets=buckets)...
+        q = running_domain_totals_bucketed(src, buckets=buckets)...
 
     The sidecar is one integer in a text file — human-inspectable and
     trivially removable WITH the checkpoint when intentionally
-    resharding (which always requires a fresh checkpoint anyway)."""
-    import os
-
-    os.makedirs(checkpoint_dir, exist_ok=True)
-    sidecar = os.path.join(checkpoint_dir, "_bucket_count")
+    resharding (which always requires a fresh checkpoint anyway).
+    A count below 1 or a non-local checkpoint URI raises ValueError."""
+    _require_positive(buckets)
+    local_dir = _local_checkpoint_dir(checkpoint_dir)
+    os.makedirs(local_dir, exist_ok=True)
+    sidecar = os.path.join(local_dir, "_bucket_count")
     if os.path.exists(sidecar):
         with open(sidecar) as fh:
             pinned = int(fh.read().strip())
@@ -196,12 +199,16 @@ def validate_bucket_count(checkpoint_dir: str, buckets: int) -> int:
 def running_domain_totals_bucketed(
     decoded: DataFrame, buckets: int | None = None, est_keys: int | None = None
 ) -> DataFrame:
-    """`running_domain_totals` with hash-bucketed state — identical
-    output (one updated row per domain per batch, lifetime counters)
-    but grouped on ``hash(domain) % buckets`` instead of the domain.
+    """Per-domain lifetime counters (n_edits, total_edit_size) with
+    hash-bucketed state: one updated row per domain seen in each batch,
+    state carried across triggers and never expired. The output equals
+    the native update-mode aggregate ``groupBy("domain").agg(count("*"),
+    coalesce(sum(abs(new_length - old_length)), 0))`` batch for batch
+    (tests/test_stateful.py), but grouping is on ``hash(domain) %
+    buckets`` instead of the domain.
 
     Why: applyInPandasWithState invokes the Python function once per
-    GROUP per batch. At sf100 the plain operator's 1.5 M live domains
+    GROUP per batch. Grouped per key, sf100's 1.5 M live domains
     mean 1.5 M Arrow round trips and state-store point lookups per
     trigger — per-call overhead, not aggregation work, is the measured
     bottleneck (49.2 K ev/s vs 3.1 M ev/s for the JVM twin,

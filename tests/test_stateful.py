@@ -1,6 +1,7 @@
-"""Custom stateful streaming operators: applyInPandasWithState running
-totals (the reference WindowFunction generalization) and stream-stream
-interval join."""
+"""Custom stateful streaming operators: the bucketed
+applyInPandasWithState running totals (the reference WindowFunction
+generalization), pinned to their native aggregate twin, and the
+stream-stream interval join."""
 
 from __future__ import annotations
 
@@ -8,12 +9,13 @@ import json
 import os
 import time
 
+from pyspark.sql import functions as F
+
 from flink_wikipedia_spark.operators.core import decode_edit_events
 from flink_wikipedia_spark.streaming.sinks import MemorySink
 from flink_wikipedia_spark.streaming.sources import file_source
 from flink_wikipedia_spark.streaming.stateful import (
     purchases_with_recent_views,
-    running_domain_totals,
     running_domain_totals_bucketed,
 )
 from tests.test_streaming import ev, write_file
@@ -27,8 +29,9 @@ def test_running_totals_accumulate_across_batches(spark, tmp_path):
     write_file(src, "001.json", [ev(3, old=0, new=7)], base + 10)
     sink = MemorySink()
     q = (
-        running_domain_totals(
-            decode_edit_events(file_source(spark, src, max_files_per_trigger=1))
+        running_domain_totals_bucketed(
+            decode_edit_events(file_source(spark, src, max_files_per_trigger=1)),
+            buckets=2,
         )
         .writeStream.outputMode("update")
         .foreachBatch(sink)
@@ -47,12 +50,25 @@ def test_running_totals_accumulate_across_batches(spark, tmp_path):
     assert per_batch[-1]["en.wikipedia.org"] == (3, 22)
 
 
-def test_bucketed_totals_match_per_key_operator(spark, tmp_path):
+def native_domain_totals(decoded):
+    """The JVM twin of running_domain_totals_bucketed: a built-in
+    update-mode aggregate. coalesce(…, 0) matches the pandas sum of a
+    domain whose lengths are all null, which is 0."""
+    return decoded.groupBy("domain").agg(
+        F.count("*").alias("n_edits"),
+        F.coalesce(
+            F.sum(F.abs(F.col("new_length") - F.col("old_length"))), F.lit(0)
+        ).alias("total_edit_size"),
+    )
+
+
+def test_bucketed_totals_match_native_aggregate(spark, tmp_path):
     """running_domain_totals_bucketed must be batch-for-batch
-    indistinguishable from the per-key operator: same per-domain
-    lifetime counters, rows emitted only for domains seen in the batch,
-    state carried across triggers. Exercised with many domains per
-    bucket (buckets=2 over 6 domains) so merging is actually tested."""
+    indistinguishable from the native groupBy("domain") aggregate in
+    update mode: same per-domain lifetime counters, rows emitted only
+    for domains seen in the batch, state carried across triggers.
+    Exercised with many domains per bucket (buckets=2 over 6 domains)
+    so merging is actually tested."""
     batches = [
         [ev(1, domain=f"d{i}.org", old=0, new=10 + i) for i in range(6)]
         + [ev(10, domain="d0.org", old=0, new=3)],
@@ -93,16 +109,16 @@ def test_bucketed_totals_match_per_key_operator(spark, tmp_path):
             if rows
         ]
 
-    plain = run(running_domain_totals, "ck_plain")
+    native = run(native_domain_totals, "ck_native")
     bucketed = run(
         lambda d: running_domain_totals_bucketed(d, buckets=2), "ck_bucketed"
     )
-    assert plain == bucketed
+    assert bucketed == native
     # and the carried state is right: batch 2 updates d1 to lifetime
     # (3, 18) — the null-length edit counts, sized 0 — first-sees d6,
     # and the null-domain row forms its own group (sorted() puts the
     # None-domain tuple first)
-    assert plain[-1] == [
+    assert bucketed[-1] == [
         (None, 1, 8),
         ("d1.org", 3, 18),
         ("d6.org", 1, 1),

@@ -1,12 +1,13 @@
-"""Property pin: the hash-bucketed running-totals operator is
-semantics-equal to the per-key one for ANY partition of domains into
-buckets, any batch sequence, null domains, and null lengths.
+"""Property pin: the hash-bucketed running-totals update function equals
+a pure-Python per-key dict reference for ANY partition of domains into buckets
+(one bucket included), any batch split, null domains and null lengths.
 
 The real-stream equality test (test_stateful.py) proves the full
-applyInPandasWithState wiring on a narrow fixture; this drives the two
-update FUNCTIONS directly against fake GroupState, so hypothesis can
-afford hundreds of adversarial examples (a bucketed-state bug found at
-sf100 costs hours; here it costs milliseconds).
+applyInPandasWithState wiring against the native aggregate on a narrow
+fixture; this drives the update FUNCTION directly against a fake
+GroupState, so hypothesis can afford hundreds of adversarial examples
+(a bucketed-state bug found at sf100 costs hours; here it costs
+milliseconds).
 """
 
 from __future__ import annotations
@@ -15,21 +16,12 @@ import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from flink_wikipedia_spark.streaming.stateful import (
-    _update_totals,
-    _update_totals_bucketed,
-)
+from flink_wikipedia_spark.streaming.stateful import _update_totals_bucketed
 
 DOMAINS = ["a.org", "b.org", "c.org", "d.org", None]
 
-row = st.tuples(
-    st.sampled_from(DOMAINS),
-    st.one_of(st.none(), st.integers(min_value=0, max_value=10_000)),  # old
-    st.one_of(st.none(), st.integers(min_value=0, max_value=10_000)),  # new
-)
-batches_strategy = st.lists(
-    st.lists(row, min_size=1, max_size=20), min_size=1, max_size=5
-)
+length = st.one_of(st.none(), st.integers(min_value=-1000, max_value=10_000))
+row = st.tuples(st.sampled_from(DOMAINS), length, length)  # domain, old, new
 
 
 class FakeGroupState:
@@ -49,13 +41,13 @@ class FakeGroupState:
 
 
 def _pdf(rows):
-    # float64 with NaN for nulls — what Arrow hands the Python worker
-    # for nullable long columns
+    # pd.Series infers what Arrow hands the Python worker: int64 for a
+    # null-free long column, float64 with NaN once it holds a null
     return pd.DataFrame(
         {
             "domain": [d for d, _, _ in rows],
-            "old_length": pd.Series([o for _, o, _ in rows], dtype="float64"),
-            "new_length": pd.Series([n for _, _, n in rows], dtype="float64"),
+            "old_length": pd.Series([o for _, o, _ in rows]),
+            "new_length": pd.Series([n for _, _, n in rows]),
         }
     )
 
@@ -65,63 +57,75 @@ def _norm_key(d):
     return None if d is None or (isinstance(d, float) and pd.isna(d)) else d
 
 
-def run_per_key(batches):
-    states, out = {}, []
-    for batch in batches:
-        emitted = {}
-        doms = {d for d, _, _ in batch}
-        for dom in doms:
-            rows = [r for r in batch if r[0] == dom]
-            st_ = states.setdefault(dom, FakeGroupState())
-            for df in _update_totals((dom,), iter([_pdf(rows)]), st_):
-                r = df.iloc[0]
-                emitted[_norm_key(r["domain"])] = (
-                    int(r["n_edits"]),
-                    int(r["total_edit_size"]),
-                )
-        out.append(emitted)
-    return out
+def _split(rows, cuts):
+    bounds = sorted({c for c in cuts if c < len(rows)}) + [len(rows)]
+    return [rows[a:b] for a, b in zip([0] + bounds, bounds) if b > a]
 
 
-def run_bucketed(batches, bucket_of):
-    states, out = {}, []
-    for batch in batches:
-        emitted = {}
-        buckets = {bucket_of(d) for d, _, _ in batch}
-        for b in buckets:
-            rows = [r for r in batch if bucket_of(r[0]) == b]
+def _check_matches_per_key_reference(rows, cuts, bucket_of):
+    """Run _update_totals_bucketed over the batches cut from ``rows``,
+    each domain in bucket ``bucket_of[domain]``, and compare it with a
+    per-key dict reference."""
+    want: dict[str | None, tuple[int, int]] = {}
+    states: dict[int, FakeGroupState] = {}
+    for batch in _split(rows, cuts):
+        # reference: every row counts; only a row with both lengths
+        # non-null adds to the size
+        for d, old, new in batch:
+            n, s = want.get(d, (0, 0))
+            size = abs(new - old) if old is not None and new is not None else 0
+            want[d] = (n + 1, s + size)
+
+        emitted: list[tuple[str | None, int, int]] = []
+        for b in sorted({bucket_of[d] for d, _, _ in batch}):
+            part = [r for r in batch if bucket_of[r[0]] == b]
             st_ = states.setdefault(b, FakeGroupState())
-            for df in _update_totals_bucketed((b,), iter([_pdf(rows)]), st_):
-                for _, r in df.iterrows():
-                    emitted[_norm_key(r["domain"])] = (
-                        int(r["n_edits"]),
-                        int(r["total_edit_size"]),
-                    )
-        out.append(emitted)
-    return out
+            for df in _update_totals_bucketed((b,), iter([_pdf(part)]), st_):
+                emitted += [
+                    (_norm_key(r.domain), int(r.n_edits), int(r.total_edit_size))
+                    for r in df.itertuples()
+                ]
+        # one row per domain seen in this batch, carrying its lifetime
+        # totals so far
+        seen = {d for d, _, _ in batch}
+        assert len(emitted) == len(seen)
+        assert {d: (n, s) for d, n, s in emitted} == {d: want[d] for d in seen}
+
+    # the carried state arrays hold exactly the reference totals, each
+    # domain in the bucket it hashes to
+    final = {}
+    for b, st_ in states.items():
+        domains, ns, ss = st_.get
+        assert all(bucket_of[d] == b for d in domains)
+        final.update(zip(domains, zip(ns, ss)))
+    assert final == want
+
+
+batches = dict(
+    rows=st.lists(row, min_size=1, max_size=60),
+    cuts=st.lists(st.integers(min_value=1, max_value=59), max_size=4),
+)
 
 
 @settings(max_examples=200, deadline=None)
-@given(batches_strategy, st.integers(min_value=1, max_value=4), st.data())
+@given(**batches, n_buckets=st.integers(min_value=1, max_value=4), data=st.data())
 def test_bucketed_equals_per_key_for_any_bucket_assignment(
-    batches, n_buckets, data
+    rows, cuts, n_buckets, data
 ):
-    # ANY domain→bucket mapping must give identical per-batch output —
-    # the operator may not rely on which keys share a bucket
-    assignment = {
+    # ANY domain→bucket mapping must give the reference's output — the
+    # operator may not rely on which keys share a bucket
+    bucket_of = {
         d: data.draw(
             st.integers(min_value=0, max_value=n_buckets - 1), label=f"b({d})"
         )
         for d in DOMAINS
     }
-    per_key = run_per_key(batches)
-    bucketed = run_bucketed(batches, lambda d: assignment[d])
-    assert bucketed == per_key
+    _check_matches_per_key_reference(rows, cuts, bucket_of)
 
 
 @settings(max_examples=50, deadline=None)
-@given(batches_strategy)
-def test_all_domains_in_one_bucket_equals_per_key(batches):
+@given(**batches)
+def test_all_domains_in_one_bucket_equals_per_key(rows, cuts):
     # degenerate worst case: every key in a single bucket (one fat
     # state row carrying the whole keyspace)
-    assert run_bucketed(batches, lambda d: 0) == run_per_key(batches)
+    _check_matches_per_key_reference(rows, cuts, dict.fromkeys(DOMAINS, 0))

@@ -15,9 +15,7 @@ event/document backlogs, the round-9 verdict ask:
   the delta vs the curation leg is the fuzzy-dedup cost — two extra
   per-band stateful shuffles per trigger — and the state delta is the
   per-band key stores;
-- **stateful**  — running_domain_totals: applyInPandasWithState lifetime
-  counters, one state row per key (~1.5 M user keys at sf100);
-- **stateful_jvm** — the SAME lifetime counters as a built-in streaming
+- **stateful_jvm** — per-user lifetime counters as a built-in streaming
   aggregate in update mode (JVM state, no Python worker in the loop).
   Registered so the cost of choosing the Python-stateful path is a
   standing, visible number (round-9 verdict: ~60× at sf100): reach for
@@ -25,15 +23,11 @@ event/document backlogs, the round-9 verdict ask:
   session machines, custom eviction, cross-event pattern state — never
   for counters;
 - **stateful_bucketed** — running_domain_totals_bucketed: the SAME
-  Python-stateful semantics with hash-bucketed state (1024 buckets over
-  ~1.5 M keys ⇒ ~1 K Python calls per trigger instead of 1.5 M). The
-  r10 answer to the stateful leg's per-group-call overhead: when the
-  custom state machine is per-key-independent and needs no per-key
-  timeout, bucketing recovers most of the Python-path gap;
-- **sessionize_bucketed** (r12) — sessionize_with_timers_bucketed
-  through a real transformWithState stream; records a `blocked` stub
-  where google.protobuf is absent (this sandbox) so the artifact
-  self-heals on standard deployments;
+  counters through applyInPandasWithState with hash-bucketed state
+  (1024 buckets over ~1.5 M keys ⇒ ~1 K Python calls per trigger
+  instead of one per key). When the custom state machine is
+  per-key-independent and needs no per-key timeout, bucketing recovers
+  most of the Python-path gap;
 - **ss_join**   — purchases_with_recent_views: stream-stream interval
   join, state bounded by the 1 h horizon on each side.
 
@@ -246,7 +240,7 @@ def main() -> None:
     ap.add_argument("--keep", action="store_true", help="keep rendered inputs")
     ap.add_argument(
         "--legs",
-        default="curation,curation_triad,curation_neardup,stateful,stateful_jvm,stateful_bucketed,sessionize_bucketed,ss_join",
+        default="curation,curation_triad,curation_neardup,stateful_jvm,stateful_bucketed,ss_join",
         help="comma list to run",
     )
     ap.add_argument(
@@ -263,8 +257,10 @@ def main() -> None:
     from flink_wikipedia_spark.streaming.pipeline import build_curation_stream
     from flink_wikipedia_spark.streaming.sources import file_source
     from flink_wikipedia_spark.streaming.stateful import (
+        default_bucket_count,
         purchases_with_recent_views,
-        running_domain_totals,
+        running_domain_totals_bucketed,
+        validate_bucket_count,
     )
     from pyspark.sql import functions as F
 
@@ -289,7 +285,7 @@ def main() -> None:
     ev_dir = os.path.join(work, "events_json")
     doc_dir = os.path.join(work, "docs_json")
 
-    if legs & {"stateful", "stateful_jvm", "stateful_bucketed", "ss_join"}:
+    if legs & {"stateful_jvm", "stateful_bucketed", "ss_join"}:
         t0 = time.perf_counter()
         n_ev = render_events(spark, args.sf_dir, ev_dir, args.events)
         print(f"rendered {n_ev} events in {time.perf_counter()-t0:.0f}s", flush=True)
@@ -357,32 +353,7 @@ def main() -> None:
             os.path.join(work, "ck_curation_neardup"), n_docs
         )
 
-    if "stateful" in legs:
-
-        def build(sink, ck):
-            totals = running_domain_totals(
-                decode_edit_events(
-                    file_source(spark, ev_dir, max_files_per_trigger=1)
-                )
-            )
-            return (
-                totals.writeStream.outputMode("update")
-                .foreachBatch(sink)
-                .option("checkpointLocation", ck)
-                .trigger(availableNow=True)
-                .start()
-            )
-
-        results["legs"]["stateful"] = run_leg(
-            "stateful", build, os.path.join(work, "ck_stateful"), n_ev
-        )
-
     if "stateful_bucketed" in legs:
-        from flink_wikipedia_spark.streaming.stateful import (
-            default_bucket_count,
-            running_domain_totals_bucketed,
-            validate_bucket_count,
-        )
 
         def build(sink, ck):
             # pin the count to the checkpoint (ADVICE r11 guard): a
@@ -414,61 +385,14 @@ def main() -> None:
         if args.buckets is not None:
             rec["buckets"] = args.buckets
         else:
-            from flink_wikipedia_spark.streaming.stateful import (
-                default_bucket_count,
-            )
-
             rec["buckets"] = default_bucket_count(
                 spark.sparkContext.defaultParallelism
             )
             rec["buckets_auto"] = True
         results["legs"]["stateful_bucketed"] = rec
 
-    if "sessionize_bucketed" in legs:
-        # r12: the hash-bucketed timer sessionizer through a REAL
-        # transformWithState stream. Gated on google.protobuf (the
-        # engine's Python<->JVM state protocol needs it — absent in
-        # the build sandbox, present on standard deployments); when
-        # blocked, the leg records the block instead of dying, so the
-        # artifact self-heals wherever protobuf exists. Harness-level
-        # throughput lives in tools/bench_session_processors.py.
-        try:
-            import google.protobuf  # noqa: F401
-
-            from flink_wikipedia_spark.streaming.stateful_v2 import (
-                sessionize_with_timers_bucketed,
-            )
-
-            def build(sink, ck):
-                sessions = sessionize_with_timers_bucketed(
-                    decode_edit_events(
-                        file_source(spark, ev_dir, max_files_per_trigger=1)
-                    ),
-                    gap="30 minutes",
-                    buckets=args.buckets,
-                )
-                return (
-                    sessions.writeStream.outputMode("update")
-                    .foreachBatch(sink)
-                    .option("checkpointLocation", ck)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-
-            results["legs"]["sessionize_bucketed"] = run_leg(
-                "sessionize_bucketed",
-                build,
-                os.path.join(work, "ck_sess_b"),
-                n_ev,
-            )
-        except ImportError:
-            results["legs"]["sessionize_bucketed"] = {
-                "blocked": "google.protobuf absent — transformWithState "
-                "state protocol unavailable (SCALE.md §r12 probe)"
-            }
-
     if "stateful_jvm" in legs:
-        # Built-in twin of running_domain_totals: identical output
+        # Built-in twin of running_domain_totals_bucketed: identical output
         # schema and cadence (one updated row per key per batch), but
         # the state row is a native unsaferow aggregate buffer — no
         # Arrow transfer, no Python worker. Same input, same store.
