@@ -30,14 +30,35 @@ large cluster up front:
   trigger 85 → 26 at 2 state partitions, none of them ``readlink``;
   ``perfbench`` stream-flagship wall 5.87 → 4.67 s (median of 10
   interleaved pairs on 2 pinned CPUs of a 4-vCPU VM, 10/10 pairs won).
+- **A ``file:`` FileSystem that creates files without forking** —
+  without libhadoop, Hadoop's ``RawLocalFileSystem.setPermission`` forks
+  a ``chmod`` process for every local file create (data and ``.crc``)
+  and every ``mkdirs`` with a mode, and no Hadoop or Spark setting
+  avoids it. ``java/NoForkLocalFileSystem.java``, the repo's one Java
+  source, sets the same bits through ``java.nio``; everything else,
+  rename's refusal of an existing file included, is the stock ``file:``
+  class (Hive's ``ProxyLocalFileSystem`` in Spark's distributions). It
+  is compiled once, into ``java/build-<key>`` next to the source, and
+  wired in only when ``get_spark`` launches a ``local``/``local-cluster``
+  JVM. JFR ``chmod`` forks per flagship trigger 26.4 → 0;
+  ``perfbench`` stream-flagship CPU 4.07 → 3.22 s (median of 25
+  interleaved pairs on 2 pinned CPUs of a 4-vCPU VM, 23/25 pairs won),
+  a gap smaller than the parent's own quartile spread there (1.00 s),
+  so not a demonstrated gain on that host.
 """
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
 import re
+import shutil
+import subprocess
 import sys
+import tempfile
 
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 # Defaults match the driver environment: local[$SPARK_GRAFT_CPUS] with 32
@@ -221,11 +242,13 @@ def get_spark(
         # is absent. JFR on the flagship stream with 2 state partitions
         # counted 85 process forks per trigger, 59 of them `readlink`,
         # and each extra state partition adds ~21 (16 `readlink`); with
-        # this manager 26 remain, ~5 per state partition, all `chmod`
-        # from file creates, and none is `readlink`. The guarantee is the
-        # same: on file: both managers check the destination then rename
-        # (exists(dst) + rename here), so a second createAtomic(p,
-        # overwrite=false) still fails and leaves the first file intact;
+        # this manager none is `readlink`. The ~26 `chmod` forks per
+        # trigger of file creates that remained are gone too wherever
+        # _local_fs_confs wires in NoForkLocalFileSystem. The guarantee
+        # is the same: on file: both managers check the destination
+        # then rename (exists(dst) + rename here), so a second
+        # createAtomic(p, overwrite=false) still fails and leaves the
+        # first file intact;
         # HDFS rename refuses an existing destination; Hadoop .crc files
         # and Spark's own state-file checksums are still written
         # (ChecksumCheckpointFileManager wraps whichever manager is set).
@@ -298,6 +321,8 @@ def get_spark(
             "org.apache.spark.sql.execution.streaming.state."
             "RocksDBStateStoreProvider",
         )
+    for key, value in _local_fs_confs(master).items():
+        builder = builder.config(key, value)
     spark = builder.getOrCreate()
     # One startup line when the JVM-heap-per-core shape violates the
     # 1 GB/core deployment rule (sf100 forensics) — the rule travels
@@ -362,6 +387,128 @@ def _ship_package(spark: SparkSession) -> None:
     )
     spark.sparkContext.addPyFile(archive)
     _SHIPPED_APP_IDS.add(app_id)
+
+
+NOFORK_FS_CLASS = "flink_wikipedia_spark.NoForkLocalFileSystem"
+_NOFORK_FS_SOURCE = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "java", "NoForkLocalFileSystem.java"
+)
+_NOFORK_FS_CLASSFILE = os.path.join("flink_wikipedia_spark", "NoForkLocalFileSystem.class")
+
+
+def nofork_fs_classes() -> str | None:
+    """The class-path directory holding the compiled
+    NoForkLocalFileSystem, or None (after one stderr line) when it is
+    not available: no Hadoop API jar, no ``javac``, a failed compile or
+    a read-only package directory.
+
+    The classes go next to the source, into ``java/build-<key>``, where
+    the key hashes the source and the API jar's name (which carries the
+    Hadoop version), so an upgrade recompiles. A cold compile takes
+    1–2 s; it goes into a temp dir that is then renamed into place, so
+    concurrent launches never see half a class file."""
+
+    def unavailable(why: str) -> None:
+        print(
+            f"flink_wikipedia_spark: {why}; keeping Hadoop's stock file: "
+            "FileSystem (forks chmod per local file create)",
+            file=sys.stderr,
+        )
+
+    jars_dir = os.path.join(_find_spark_home(), "jars")
+    api_jars = sorted(glob.glob(os.path.join(jars_dir, "hadoop-client-api-*.jar")))
+    if not api_jars:
+        return unavailable(f"no hadoop-client-api jar in {jars_dir}")
+    with open(_NOFORK_FS_SOURCE, "rb") as f:
+        key = hashlib.sha256(f.read() + os.path.basename(api_jars[-1]).encode())
+    java_dir = os.path.dirname(_NOFORK_FS_SOURCE)
+    final = os.path.join(java_dir, f"build-{key.hexdigest()[:16]}")
+    if os.path.isfile(os.path.join(final, _NOFORK_FS_CLASSFILE)):
+        return final
+    if os.path.lexists(final):
+        return unavailable(f"{final} has no compiled class; remove it to rebuild")
+
+    # the JDK Spark launches: $JAVA_HOME first, then PATH
+    java_home = os.environ.get("JAVA_HOME")
+    javac = java_home and os.path.join(java_home, "bin", "javac")
+    if not (javac and os.access(javac, os.X_OK)):
+        javac = shutil.which("javac")
+    if javac is None:
+        return unavailable("no javac found")
+    try:
+        tmp = tempfile.mkdtemp(prefix=".build-", dir=java_dir)
+    except OSError as e:
+        return unavailable(f"cannot write to {java_dir} ({e.strerror})")
+    try:
+        done = subprocess.run(
+            [javac, "--release", "17", "-nowarn", "-cp", api_jars[-1], "-d", tmp,
+             _NOFORK_FS_SOURCE],
+            capture_output=True,
+            text=True,
+        )
+        if done.returncode != 0:
+            first = (done.stderr.strip().splitlines() or ["?"])[0]
+            return unavailable(f"javac failed ({first})")
+        os.chmod(tmp, 0o755)  # mkdtemp's 0700 would hide it from other users
+        try:
+            os.replace(tmp, final)
+        except OSError:
+            pass  # a concurrent launch published it first
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)  # gone already once renamed
+    if not os.path.isfile(os.path.join(final, _NOFORK_FS_CLASSFILE)):
+        return unavailable(f"could not publish the compiled class to {final}")
+    return final
+
+
+def _launch_settings_elsewhere() -> str:
+    """Launch-time settings from outside get_spark that a conf set here
+    would replace or be replaced by: PYSPARK_SUBMIT_ARGS (its --conf
+    follows ours), SPARK_SUBMIT_OPTS system properties, and the
+    spark-defaults.conf / core-site.xml files Spark reads."""
+    text = [os.environ.get(v, "") for v in ("PYSPARK_SUBMIT_ARGS", "SPARK_SUBMIT_OPTS")]
+    conf_dirs = {
+        os.environ.get("SPARK_CONF_DIR") or os.path.join(_find_spark_home(), "conf"),
+        os.environ.get("HADOOP_CONF_DIR", ""),
+    }
+    for d in conf_dirs:
+        for name in ("spark-defaults.conf", "core-site.xml"):
+            try:
+                with open(os.path.join(d, name), encoding="utf-8", errors="replace") as f:
+                    text.append(f.read())
+            except OSError:
+                pass
+    return "\n".join(text)
+
+
+def _local_fs_confs(master: str) -> dict[str, str]:
+    """Launch confs that serve ``file:`` through NoForkLocalFileSystem.
+
+    Empty unless this call is about to launch the JVM (no py4j gateway
+    yet: a running JVM's class path is fixed, and naming a class it
+    cannot load as fs.file.impl breaks every local read and write) under
+    a local or local-cluster master (the class dir exists on this host
+    only), and nothing outside get_spark sets fs.file.impl or a driver
+    or executor class path (never override the one; the other would
+    drop our directory or be dropped by it)."""
+    from pyspark import SparkContext
+
+    single_host = master == "local" or master.startswith(("local[", "local-cluster["))
+    if SparkContext._gateway is not None or not single_host:
+        return {}
+    elsewhere = _launch_settings_elsewhere()
+    if any(k in elsewhere for k in ("fs.file.impl", "extraClassPath", "--driver-class-path")):
+        return {}
+    classes = nofork_fs_classes()
+    if classes is None:
+        return {}
+    confs = {
+        "spark.driver.extraClassPath": classes,
+        "spark.hadoop.fs.file.impl": NOFORK_FS_CLASS,
+    }
+    if master.startswith("local-cluster["):
+        confs["spark.executor.extraClassPath"] = classes
+    return confs
 
 
 def stop_spark() -> None:

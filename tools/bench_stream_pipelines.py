@@ -248,7 +248,8 @@ def main() -> None:
         type=int,
         default=None,
         help="bucket count for the stateful_bucketed leg (default: "
-        "auto from cores via stateful.default_bucket_count)",
+        "stateful.default_bucket_count from cores and the rendered "
+        "events' distinct keys)",
     )
     args = ap.parse_args()
 
@@ -354,17 +355,25 @@ def main() -> None:
         )
 
     if "stateful_bucketed" in legs:
+        # size auto buckets to the rendered keyspace: without a key
+        # estimate the floor is 1 024 buckets, about one key per bucket
+        # at small SF, so nothing is amortized and the leg measures
+        # per-call Python overhead instead of bucketing
+        est_keys = (
+            spark.read.schema("domain string").json(ev_dir).distinct().count()
+        )
+        buckets = (
+            args.buckets
+            if args.buckets is not None
+            else default_bucket_count(spark.sparkContext.defaultParallelism, est_keys)
+        )
 
         def build(sink, ck):
             # pin the count to the checkpoint (ADVICE r11 guard): a
             # resumed run with a different --buckets (or a resize that
             # changes the auto-derived count) fails loudly here instead
             # of silently re-sharding state
-            buckets = validate_bucket_count(
-                ck,
-                args.buckets
-                or default_bucket_count(spark.sparkContext.defaultParallelism),
-            )
+            validate_bucket_count(ck, buckets)
             totals = running_domain_totals_bucketed(
                 decode_edit_events(
                     file_source(spark, ev_dir, max_files_per_trigger=1)
@@ -382,13 +391,8 @@ def main() -> None:
         rec = run_leg(
             "stateful_bucketed", build, os.path.join(work, "ck_stateful_b"), n_ev
         )
-        if args.buckets is not None:
-            rec["buckets"] = args.buckets
-        else:
-            rec["buckets"] = default_bucket_count(
-                spark.sparkContext.defaultParallelism
-            )
-            rec["buckets_auto"] = True
+        rec["buckets"] = buckets
+        rec["est_keys"] = est_keys
         results["legs"]["stateful_bucketed"] = rec
 
     if "stateful_jvm" in legs:
