@@ -13,25 +13,23 @@ import org.apache.hadoop.fs.permission.FsPermission;
 import org.apache.hadoop.io.nativeio.NativeIO;
 
 /**
- * The {@code file:} FileSystem Spark's distributions resolve (Hive's
- * ProxyLocalFileSystem: a LocalFileSystem whose rename never replaces an
- * existing file) with one change. Without libhadoop,
+ * Hadoop's {@link LocalFileSystem} with one change. Without libhadoop,
  * {@link RawLocalFileSystem#setPermission} forks a {@code chmod} process
  * for every file create (data file and {@code .crc}) and every
  * {@code mkdirs} with a mode; this sets the same nine rwx bits through
- * {@code java.nio} instead. Checksums, modes and create are the stock code.
+ * {@code java.nio} instead. Checksums, modes, create and rename are the
+ * stock code. Rename replaces an existing file, which Spark's
+ * FileSystem-based checkpoint manager needs for
+ * {@code createAtomic(p, overwriteIfPossible=true)}; it checks
+ * {@code exists(p)} itself otherwise. Hive's ProxyLocalFileSystem, the
+ * {@code file:} class of Spark's Hive-enabled distributions, refuses that
+ * rename, so an overwriting state-file write there keeps the old bytes and
+ * leaves its temp file behind.
  */
 public class NoForkLocalFileSystem extends LocalFileSystem {
 
   public NoForkLocalFileSystem() {
     super(new Raw());
-  }
-
-  /** Never renames onto an existing file, as ProxyLocalFileSystem. */
-  @Override
-  @SuppressWarnings("deprecation")
-  public boolean rename(Path src, Path dst) throws IOException {
-    return !isFile(dst) && super.rename(src, dst);
   }
 
   /** Both the create path and mkOneDirWithMode call this virtually. */

@@ -9,28 +9,17 @@ never O(data)). Each iteration is one join + one aggregate; lineage is
 truncated with localCheckpoint every iteration so plans don't grow
 unboundedly — the standard Spark pattern for iterative workloads.
 
-Two distributed variants live here, sharing the driver-loop skeleton:
-
-- **min-label propagation + pointer jumping** (`_minlabel_components`):
-  each round every node takes the min label over its neighborhood, then
-  shortcuts label→label-of-label. Round count O(log diameter); the edge
-  list is joined against the full label table every round, so per-round
-  cost is stable at O(|E|).
-- **large-star / small-star** (`_star_components`; Kiveris et al.,
-  "Connected Components in MapReduce and Beyond", 2014): alternately
-  rewire every node's larger neighbors (large-star) and smaller
-  neighbors (small-star) to the neighborhood minimum until the edge set
-  is a fixed forest of stars centered at component minima. O(log² n)
-  rounds, but the edge set SHRINKS monotonically toward |V|-components,
-  so late rounds are nearly free — the better shape for high-diameter,
-  low-degree (chain-y) graphs where min-label's full-size per-round
-  join dominates.
-
-`connected_components(algorithm="auto")` picks by a cheap degree probe:
-near-dup graphs (clusters of copies) are star-shaped with huge hub
-degrees — min-label converges in 2-3 rounds there — while chain-y
-graphs show bounded max degree and avg degree ≈ 2, where the star
-algorithm's shrinking edge set wins.
+Connected components has two paths, pinned to identical labels by
+tests/test_operators.py: driver union-find for graphs under
+``SMALL_GRAPH_EDGES``, and one distributed loop for the rest,
+**min-label propagation + pointer jumping** (`_minlabel_components`):
+each round every node takes the min label over its neighborhood, then
+shortcuts label→label-of-label, so rounds are O(log diameter) and each
+round is one job over the full edge list. Large-star/small-star
+(Kiveris et al., 2014) is not used: min-label is faster on MinHash
+near-dup pairs (the only input callers pass), chains and hub graphs;
+star wins only on sparse random graphs no caller builds
+(PERF_cc_one_loop.json).
 """
 
 from __future__ import annotations
@@ -40,7 +29,7 @@ from pyspark.sql import functions as F
 
 
 # At or below this many DIRECTED edges (2 × input pairs: the count the
-# distributed loops iterate over) the component graph fits comfortably
+# distributed loop iterates over) the component graph fits comfortably
 # on the driver (~tens of MB) and union-find beats the distributed loop's
 # per-iteration job-scheduling floor by ~10x. Near-dup graphs after LSH
 # candidate filtering are orders of magnitude smaller than the corpus
@@ -81,33 +70,20 @@ def _unionfind_components(pairs) -> list:
     return [(x, min_member[find(x)]) for x in parent]
 
 
-# Degree-probe thresholds for algorithm="auto" (one aggregate over the
-# edge list). A max degree this small with near-2 average degree means
-# the graph is chains/trees, the regime where large-star/small-star's
-# shrinking edge set beats min-label's constant-size per-round join.
-# Hub-y near-dup graphs blow past the max-degree bound immediately.
-CHAINY_MAX_DEGREE = 8
-CHAINY_AVG_DEGREE = 4.0
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "doc_a",
     dst: str = "doc_b",
-    max_iter: int | None = None,
+    max_iter: int = 25,
     small_graph_edges: int = SMALL_GRAPH_EDGES,
-    algorithm: str = "auto",
 ) -> DataFrame:
     """Label each node with the minimum node id reachable from it
     (= component id). Returns (node, component).
 
-    max_iter: round budget; a non-fixed-point at the budget raises
-    RuntimeError rather than returning truncated labels. ``None``
-    (default) picks per algorithm — 25 for min-label (O(log diameter)),
-    50 for star (O(log² n) needs more rounds). An EXPLICIT value is
-    honored as given for either algorithm (ADVICE r7: the old code
-    silently raised small star budgets to 50, so a test's max_iter=12
-    no longer bounded work as written).
+    max_iter: min-label round budget (rounds are O(log diameter), so 25
+    covers diameters far past any near-dup graph); a non-fixed-point at
+    the budget raises RuntimeError rather than returning truncated
+    labels.
 
     edges: undirected pair list (each pair once is fine — both
     directions are added internally).
@@ -116,25 +92,17 @@ def connected_components(
     only, then probes it with a bounded ``limit``. A graph whose
     directed edge count (2 × input rows) is at most
     ``small_graph_edges`` is solved with driver union-find over that
-    probe; larger graphs fall through to a distributed loop over the
-    checkpoint unioned with its mirror. The guard bounds driver memory
-    — the distributed paths stay fully tested (see
-    tests/test_operators.py) and kick in automatically.
-
-    algorithm: "auto" (degree probe, see module docstring), "minlabel",
-    or "star" (large-star/small-star); anything else raises ValueError
-    before any Spark job runs. Every variant produces identical
-    (node, component) labels — pinned by tests/test_operators.py.
+    probe; larger graphs fall through to the distributed min-label loop
+    over the checkpoint unioned with its mirror. The guard bounds
+    driver memory — both paths give identical labels and stay fully
+    tested (tests/test_operators.py forces the loop with
+    ``small_graph_edges=0``).
     """
-    if algorithm not in ("auto", "minlabel", "star"):
-        raise ValueError(
-            f"algorithm must be 'auto', 'minlabel' or 'star', got {algorithm!r}"
-        )
     # materialize the edge list ONCE: the loop reads it every iteration,
     # and an unmaterialized plan would re-run the (possibly expensive)
     # upstream candidate-generation pipeline per iteration. One
-    # direction suffices: union-find needs no mirror, and the loops
-    # mirror the checkpoint lazily.
+    # direction suffices: union-find needs no mirror, and the loop
+    # mirrors the checkpoint lazily.
     fwd = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint()
     und = fwd.union(fwd.select(F.col("v").alias("u"), F.col("u").alias("v")))
     # Size probe and small-graph collect in ONE job: a bounded limit
@@ -148,7 +116,7 @@ def connected_components(
         )
         from flink_wikipedia_spark.functions.compat import arrow_local_df
 
-        # the mirror's type: mixed src/dst types widen as in the loops
+        # the mirror's type: mixed src/dst types widen as in the loop
         t = und.schema["u"].dataType.simpleString()
         # Arrow transport, not pickled rows: the labeled list can be
         # ~10^6 nodes at the guard ceiling, and the pickled-RDD path
@@ -158,27 +126,7 @@ def connected_components(
             und.sparkSession, labeled, f"node {t}, component {t}", ["node", "component"]
         )
     del probe
-    if algorithm == "auto":
-        # the probe costs one O(|E|) aggregate — ~one round of either
-        # loop — and only runs on >small_graph_edges graphs, where
-        # picking the wrong variant costs far more than one round
-        mx, avg = (
-            und.groupBy("u").count().agg(F.max("count"), F.avg("count")).first()
-        )
-        algorithm = (
-            "star"
-            if mx <= CHAINY_MAX_DEGREE and avg <= CHAINY_AVG_DEGREE
-            else "minlabel"
-        )
-    if algorithm == "star":
-        # default budget 50, not min-label's 25: star convergence is
-        # O(log² n) rounds vs min-label's O(log diameter), and a
-        # non-fixed-point is a loud RuntimeError rather than a silently
-        # -correct truncation — a shared default of 25 would turn a
-        # 26-50-round chain-heavy graph into a hard failure. Explicit
-        # budgets are honored as given (see docstring).
-        return _star_components(und, max_iter=50 if max_iter is None else max_iter)
-    return _minlabel_components(und, 25 if max_iter is None else max_iter)
+    return _minlabel_components(und, max_iter)
 
 
 def sql_components_duckdb(rounds: int = 24) -> str:
@@ -579,116 +527,3 @@ def pagerank(
         f"pagerank did not converge to two-round max|Δrank| <= {eps} "
         f"within max_iters={max_iters} rounds; raise the budget or eps"
     )
-
-
-def _star_components(und: DataFrame, max_iter: int = 50) -> DataFrame:
-    """Large-star/small-star connected components (Kiveris et al. 2014,
-    Algorithms 3-4, the "two-phase" variant proven to converge in
-    O(log² n) rounds).
-
-    Per round over the current edge set E (kept max>min oriented,
-    distinct):
-
-    - **large-star**: for every center u over BOTH orientations, connect
-      each strictly-larger neighbor v to m = min(Γ(u) ∪ {u}). Every
-      original edge survives through its larger endpoint, so
-      connectivity is preserved while long paths fold toward minima.
-    - **small-star**: for every center u over its smaller-or-equal
-      neighbors, connect each of them AND u itself to the neighborhood
-      minimum — turning local chains into stars.
-
-    Both phases are one groupBy-min + one re-join of the (checkpointed)
-    edge list — the same shuffle shape as a round of min-label, but the
-    edge set shrinks monotonically toward one edge per non-root node,
-    so late rounds get cheaper instead of staying O(|E|). Fixed point =
-    a forest of stars whose centers are component minima; labels read
-    directly off the final edges. Convergence is an exact set-equality
-    check (full-outer join of new vs old edges, counting rows missing
-    on either side) observed as a metric of the SAME action that
-    materializes the round's lazy checkpoint — one job per round, same
-    pattern as ``_minlabel_components``; at cluster scale each avoided
-    job is a scheduler round-trip per iteration.
-    """
-    from pyspark.sql import Observation
-
-    def large_star(e: DataFrame) -> DataFrame:
-        nbrs = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = (
-            nbrs.groupBy("u")
-            .agg(F.min("v").alias("_mn"))
-            .select("u", F.least("_mn", "u").alias("m"))
-        )
-        return (
-            nbrs.join(mins, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    def small_star(e: DataFrame) -> DataFrame:
-        # e is already max>min oriented, so every (u, v) has v < u
-        mins = e.groupBy("u").agg(F.min("v").alias("m"))
-        to_min = e.join(mins, "u").select(F.col("v").alias("u"), F.col("m").alias("v"))
-        center = mins.select(F.col("u"), F.col("m").alias("v"))
-        return (
-            to_min.union(center)
-            .where(F.col("u") != F.col("v"))
-            .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-            .distinct()
-        )
-
-    all_nodes = und.select(F.col("u").alias("node")).distinct().localCheckpoint()
-    edges = (
-        und.where(F.col("u") != F.col("v"))
-        .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    converged = False
-    for _ in range(max_iter):
-        # lazy: materialized by the observed comparison job below, so
-        # each round costs exactly ONE job (join shuffles ride inside it)
-        new_edges = small_star(large_star(edges)).localCheckpoint(eager=False)
-        obs = Observation()
-        compared = (
-            new_edges.withColumn("_new", F.lit(1))
-            .join(edges.withColumn("_old", F.lit(1)), ["u", "v"], "full_outer")
-            .observe(
-                obs,
-                # rows present on only one side = symmetric difference;
-                # coalesce: sum over an empty join (both sets empty) is
-                # null, which must read as converged, not changed
-                F.coalesce(
-                    F.sum(
-                        (F.col("_new").isNull() | F.col("_old").isNull()).cast(
-                            "long"
-                        )
-                    ),
-                    F.lit(0),
-                ).alias("diff"),
-            )
-        )
-        compared.count()
-        edges = new_edges
-        if obs.get["diff"] == 0:
-            converged = True
-            break
-    if not converged:
-        # a non-fixed-point edge set is not a star forest: a node could
-        # carry edges to TWO centers and would silently get two labels —
-        # fail loudly instead (O(log² n) convergence means hitting this
-        # indicates a far-too-small max_iter, not a big graph)
-        raise RuntimeError(
-            f"large-star/small-star did not reach a fixed point within "
-            f"max_iter={max_iter} rounds; rerun with a larger max_iter"
-        )
-    # fixed point: every edge is (member, component-min); roots and
-    # isolated nodes label themselves
-    member_labels = edges.select(
-        F.col("u").alias("node"), F.col("v").alias("component")
-    )
-    self_labels = all_nodes.join(
-        member_labels.select("node"), "node", "left_anti"
-    ).select("node", F.col("node").alias("component"))
-    return member_labels.unionByName(self_labels)

@@ -35,16 +35,21 @@ large cluster up front:
   a ``chmod`` process for every local file create (data and ``.crc``)
   and every ``mkdirs`` with a mode, and no Hadoop or Spark setting
   avoids it. ``java/NoForkLocalFileSystem.java``, the repo's one Java
-  source, sets the same bits through ``java.nio``; everything else,
-  rename's refusal of an existing file included, is the stock ``file:``
-  class (Hive's ``ProxyLocalFileSystem`` in Spark's distributions). It
-  is compiled once, into ``java/build-<key>`` next to the source, and
-  wired in only when ``get_spark`` launches a ``local``/``local-cluster``
-  JVM. JFR ``chmod`` forks per flagship trigger 26.4 → 0;
-  ``perfbench`` stream-flagship CPU 4.07 → 3.22 s (median of 25
-  interleaved pairs on 2 pinned CPUs of a 4-vCPU VM, 23/25 pairs won),
-  a gap smaller than the parent's own quartile spread there (1.00 s),
-  so not a demonstrated gain on that host.
+  source, sets the same bits through ``java.nio``; everything else is
+  Hadoop's ``LocalFileSystem``. Its rename replaces an existing file, so
+  a state store's ``createAtomic(p, overwriteIfPossible=true)`` onto an
+  existing ``p`` writes the new bytes and leaves no ``.tmp``/``.crc``
+  behind. The stock ``file:`` class it replaces (Hive's
+  ``ProxyLocalFileSystem`` in Spark's Hive-enabled distributions)
+  refuses that rename, silently keeps the old bytes and leaks the temp
+  file; a session without ``javac`` falls back to that class and keeps
+  that behaviour. The class is compiled once, into ``java/build-<key>``
+  next to the source, and wired in only when ``get_spark`` launches a
+  ``local``/``local-cluster`` JVM. JFR ``chmod`` forks per flagship
+  trigger 26.4 → 0; ``perfbench`` stream-flagship CPU 4.07 → 3.22 s
+  (median of 25 interleaved pairs on 2 pinned CPUs of a 4-vCPU VM,
+  23/25 pairs won), a gap smaller than the parent's own quartile spread
+  there (1.00 s), so not a demonstrated gain on that host.
 """
 
 from __future__ import annotations

@@ -4,10 +4,12 @@
 Without libhadoop, Hadoop's RawLocalFileSystem.setPermission forks a
 ``chmod`` process for every local file create and every mkdirs with a
 mode — ~26 per flagship stream trigger. NoForkLocalFileSystem sets the
-same bits through java.nio. These tests pin three things: no ``chmod``
+same bits through java.nio. These tests pin four things: no ``chmod``
 is forked by a get_spark session's batch and stream writes; modes,
 ``.crc`` sidecars and the sticky-bit fallback match the stock class;
-the wiring never points fs.file.impl at a class the JVM cannot load.
+rename replaces an existing file, so an overwriting checkpoint write
+leaves no temp file behind; the wiring never points fs.file.impl at a
+class the JVM cannot load.
 """
 
 from __future__ import annotations
@@ -18,6 +20,9 @@ import shutil
 import stat
 import subprocess
 import sys
+
+import pytest
+from py4j.protocol import Py4JJavaError
 
 from flink_wikipedia_spark import session
 from flink_wikipedia_spark.session import NOFORK_FS_CLASS, nofork_fs_classes
@@ -115,9 +120,12 @@ def test_local_fs_class_matches_stock_modes_rename_and_sticky(spark, tmp_path):
     """The fixture session's file: FileSystem is NoForkLocalFileSystem
     through both FileSystem.get and FileSystem.getLocal (which casts to
     LocalFileSystem). Against the class file: resolves without it, the
-    same creates, mkdirs and renames give the same modes, .crc sidecars
-    and results; setPermission sets exact bits and a sticky-bit mode
-    falls back to the stock path."""
+    same creates and mkdirs give the same modes and .crc sidecars.
+    Renames are Hadoop's LocalFileSystem's: a rename onto an existing
+    file replaces it, which Hive's ProxyLocalFileSystem (the stock
+    file: class in Spark's Hive-enabled distributions) refuses.
+    setPermission sets exact bits and a sticky-bit mode falls back to
+    the stock path."""
     jvm = spark.sparkContext._jvm
     H = jvm.org.apache.hadoop
     uri = jvm.java.net.URI("file:///")
@@ -133,6 +141,8 @@ def test_local_fs_class_matches_stock_modes_rename_and_sticky(spark, tmp_path):
     stock_conf.unset("fs.file.impl")
     fs = H.fs.FileSystem.newInstance(uri, conf)
     stock = H.fs.FileSystem.newInstance(uri, stock_conf)
+    hadoop = H.fs.LocalFileSystem()
+    hadoop.initialize(uri, conf)
     assert fs.getClass().getName() == NOFORK_FS_CLASS
     assert stock.getClass().getName() != NOFORK_FS_CLASS
     umask = H.fs.permission.FsPermission.getUMask(conf).toShort()
@@ -142,42 +152,75 @@ def test_local_fs_class_matches_stock_modes_rename_and_sticky(spark, tmp_path):
         def P(*parts):
             return H.fs.Path(str(root.joinpath(*parts)))
 
+        def modes():
+            return {
+                os.path.relpath(os.path.join(dp, n), root): _mode(os.path.join(dp, n))
+                for dp, dns, fns in os.walk(root)
+                for n in dns + fns
+            }
+
         fs.mkdirs(P("d", "e"))
         fs.create(P("f")).close()
         fs.create(P("g")).close()
-        renames = (fs.rename(P("g"), P("f")), fs.rename(P("g"), P("h")))
-        modes = {
-            os.path.relpath(os.path.join(dp, n), root): _mode(os.path.join(dp, n))
-            for dp, dns, fns in os.walk(root)
-            for n in dns + fns
-        }
-        return renames, modes
+        created = modes()
+        renames = (fs.rename(P("g"), P("f")), fs.rename(P("f"), P("h")))
+        return created, renames, modes()
 
     ours = exercise(fs, tmp_path / "ours")
-    assert ours == exercise(stock, tmp_path / "stock")
-    renames, modes = ours
-    assert renames == (False, True)  # never onto an existing file
-    assert modes == {
-        "d": 0o777 & ~umask,
-        "d/e": 0o777 & ~umask,
-        "f": 0o666 & ~umask,
-        ".f.crc": 0o666 & ~umask,
-        "h": 0o666 & ~umask,
-        ".h.crc": 0o666 & ~umask,
+    assert ours[0] == exercise(stock, tmp_path / "stock")[0]
+    assert ours == exercise(hadoop, tmp_path / "hadoop")
+    created, renames, modes = ours
+    dir_mode, file_mode = 0o777 & ~umask, 0o666 & ~umask
+    assert created == {
+        "d": dir_mode, "d/e": dir_mode,
+        "f": file_mode, ".f.crc": file_mode,
+        "g": file_mode, ".g.crc": file_mode,
     }
+    assert renames == (True, True)  # g replaces f, then f moves to h
+    assert modes == {"d": dir_mode, "d/e": dir_mode, "h": file_mode, ".h.crc": file_mode}
 
     def perm(mode):
         return H.fs.permission.FsPermission(jvm.java.lang.Short.valueOf(str(mode)))
 
-    f, d = tmp_path / "ours" / "f", tmp_path / "ours" / "d"
-    fs.setPermission(H.fs.Path(str(f)), perm(0o604))
-    assert _mode(f) == 0o604
-    fs.setPermission(H.fs.Path(str(f)), perm(0o640))
-    assert _mode(f) == 0o640
+    h, d = tmp_path / "ours" / "h", tmp_path / "ours" / "d"
+    fs.setPermission(H.fs.Path(str(h)), perm(0o604))
+    assert _mode(h) == 0o604
+    fs.setPermission(H.fs.Path(str(h)), perm(0o640))
+    assert _mode(h) == 0o640
     fs.setPermission(H.fs.Path(str(d)), perm(0o1777))
     assert _mode(d) == 0o1777
     fs.close()
     stock.close()
+    hadoop.close()
+
+
+def test_checkpoint_overwrite_replaces_file_and_leaves_no_temp(spark, tmp_path):
+    """Through the session's checkpoint manager (newHadoopConf carries
+    checkpointFileManagerClass) on this FS: two createAtomic(p, true)
+    writes, the way state stores rewrite a delta or snapshot, leave the
+    second bytes and no .tmp or .crc orphan. createAtomic(q, false)
+    onto an existing q still raises and keeps the first bytes."""
+    jvm = spark.sparkContext._jvm
+    hconf = spark._jsparkSession.sessionState().newHadoopConf()
+    root = tmp_path / "ck"
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+    mgr = manager.create(jvm.org.apache.hadoop.fs.Path(str(root)), hconf)
+
+    def write(name, data, overwrite):
+        out = mgr.createAtomic(jvm.org.apache.hadoop.fs.Path(str(root / name)), overwrite)
+        out.write(data)
+        out.close()
+
+    write("p", b"first", True)
+    after_first = sorted(os.listdir(root))
+    write("p", b"second", True)
+    assert (root / "p").read_bytes() == b"second"
+    assert sorted(os.listdir(root)) == after_first == [".p.crc", "p"]
+
+    write("q", b"first", False)
+    with pytest.raises(Py4JJavaError):
+        write("q", b"second", False)
+    assert (root / "q").read_bytes() == b"first"
 
 
 _VANILLA_FIRST = r"""

@@ -168,10 +168,10 @@ def test_connected_components_chain_and_island(spark):
     assert got_dist == expected
 
 
-def test_connected_components_star_variant(spark):
-    """Large-star/small-star must produce labels identical to min-label
-    and driver union-find on every graph shape, including the
-    adversarial chain where naive propagation needs O(n) rounds."""
+def test_connected_components_minlabel_matches_unionfind(spark):
+    """The distributed min-label loop must produce labels identical to
+    driver union-find on every graph shape, including the adversarial
+    chain where naive propagation needs O(n) rounds."""
     import random
 
     from flink_wikipedia_spark.operators.graph import connected_components
@@ -182,44 +182,41 @@ def test_connected_components_star_variant(spark):
             for r in connected_components(edges, small_graph_edges=0, **kw).collect()
         }
 
+    def unionfind(edges):
+        return {r.node: r.component for r in connected_components(edges).collect()}
+
     # 256-node chain: diameter 255. max_iter=12 would time out any
-    # O(diameter)-round scheme — large-star/small-star's O(log² n)
+    # O(diameter)-round scheme — pointer jumping's O(log diameter)
     # convergence is what makes the labels come out right at all.
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(255)], "doc_a long, doc_b long"
     )
-    got_star = labels(chain, algorithm="star", max_iter=12)
-    assert got_star == {i: 0 for i in range(256)}
-    assert labels(chain, algorithm="minlabel") == got_star
-    # the degree probe must route a chain (max degree 2) to "star"
-    assert labels(chain, algorithm="auto") == got_star
+    expected = {i: 0 for i in range(256)}
+    assert labels(chain, max_iter=12) == expected
+    assert unionfind(chain) == expected
 
-    # random graphs: star == minlabel == driver union-find
+    # random graphs: min-label == driver union-find
     rng = random.Random(7)
     for trial in range(3):
         pairs = [
             (rng.randrange(60), rng.randrange(60)) for _ in range(40 + 20 * trial)
         ]
         edges = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-        ref = {
-            r.node: r.component for r in connected_components(edges).collect()
-        }
-        assert labels(edges, algorithm="star") == ref
-        assert labels(edges, algorithm="minlabel") == ref
+        assert labels(edges) == unionfind(edges)
 
-    # hub graph (near-dup shape): auto must pick minlabel and stay right
+    # hub graph (near-dup shape)
     hub = spark.createDataFrame(
         [(0, i) for i in range(1, 40)] + [(100, 101)], "doc_a long, doc_b long"
     )
     expected = {i: 0 for i in range(40)} | {100: 100, 101: 100}
-    assert labels(hub, algorithm="auto") == expected
-    assert labels(hub, algorithm="star") == expected
+    assert labels(hub) == expected
+    assert unionfind(hub) == expected
 
 
 def test_connected_components_awkward_edge_list(spark):
     """Duplicate pairs, both orientations of a pair, a self-loop and an
-    isolated pair: the driver path and both distributed loops (which
-    mirror the one checkpointed direction) must give the same labels."""
+    isolated pair: the driver path and the distributed loop (which
+    mirrors the one checkpointed direction) must give the same labels."""
     from flink_wikipedia_spark.operators.graph import connected_components
 
     edges = spark.createDataFrame(
@@ -231,8 +228,7 @@ def test_connected_components_awkward_edge_list(spark):
         return {r.node: r.component for r in connected_components(edges, **kw).collect()}
 
     assert labels() == expected
-    assert labels(small_graph_edges=0, algorithm="minlabel") == expected
-    assert labels(small_graph_edges=0, algorithm="star") == expected
+    assert labels(small_graph_edges=0) == expected
 
 
 def test_connected_components_guard_counts_directed_edges(spark):
@@ -244,7 +240,7 @@ def test_connected_components_guard_counts_directed_edges(spark):
     edges = spark.createDataFrame([(1, 2), (2, 3), (4, 5)], "doc_a long, doc_b long")
     expected = {1: 1, 2: 1, 3: 1, 4: 4, 5: 4}
     for guard, on_driver in ((5, False), (6, True)):  # 6 directed edges
-        got = connected_components(edges, small_graph_edges=guard, algorithm="minlabel")
+        got = connected_components(edges, small_graph_edges=guard)
         assert got.isLocal() == on_driver
         assert {r.node: r.component for r in got.collect()} == expected
 
@@ -258,22 +254,7 @@ def test_minlabel_budget_exhausted_raises(spark):
         [(i, i + 1) for i in range(127)], "doc_a long, doc_b long"
     )
     with pytest.raises(RuntimeError, match="max_iter=1"):
-        connected_components(
-            chain, small_graph_edges=0, algorithm="minlabel", max_iter=1
-        ).collect()
-
-
-def test_connected_components_rejects_unknown_algorithm(spark):
-    """An unknown algorithm raises before any Spark job: evaluating this
-    edge list would fail with a Spark error, not ValueError."""
-    from flink_wikipedia_spark.operators.graph import connected_components
-
-    poisoned = spark.range(2).select(
-        F.col("id").alias("doc_a"),
-        F.raise_error(F.lit("edge list evaluated")).cast("long").alias("doc_b"),
-    )
-    with pytest.raises(ValueError, match="bogus"):
-        connected_components(poisoned, algorithm="bogus")
+        connected_components(chain, small_graph_edges=0, max_iter=1).collect()
 
 
 def test_map_fold_multikey(spark):

@@ -6,6 +6,7 @@ DuckDB; these tests force the DISTRIBUTED path with
 ``small_graph_edges=0`` and pin that both paths produce bit-identical
 ranks AND the same stopping round — the property that makes the
 bounded small-graph guard a pure optimization, never a semantic fork.
+The budget-mode persist must also be tracked and released.
 """
 
 from __future__ import annotations
@@ -15,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from flink_wikipedia_spark.operators.graph import pagerank
+from tests.conftest import SF_SMOKE
 
 UNIT = 1_000_000
 
@@ -154,3 +156,44 @@ def test_two_round_delta_converges_through_period2_cycle():
     np.add.at(sums, dst_idx, ranks[src_idx] // deg.astype(np.int64))
     nxt = 500_000 + (500 * sums) // 1000
     assert int(np.abs(nxt - ranks).max()) > 10_000
+
+
+def test_pagerank_cache_is_tracked_and_released(spark):
+    """q_pagerank_parts_suppliers persists its degreed edge list for the
+    iteration loop; the persist must be tracked so release_caches() can
+    free it after the caller consumes the result — without it every
+    pagerank call leaked a fact-sized cached frame into the session.
+    (Budget-mode pagerank is ALWAYS the lazy distributed ladder — the
+    r12 small-graph guard applies only in convergence mode — so this
+    pins the production path, no forcing needed.)"""
+    from flink_wikipedia_spark.plans import REGISTRY
+    from flink_wikipedia_spark.plans.registry import _LIVE_CACHES, release_caches
+
+    release_caches()  # clean slate (other tests may have run queries)
+    # other tests' own persists (and CacheManager plan-matching) are
+    # session-global — clear the SQL caches and snapshot the residue
+    # (RDD-level localCheckpoint blocks from the graph loop survive
+    # clearCache and are reclaimed only by GC): the end-state assertion
+    # is a DELTA against this baseline (round-9 full-suite lesson)
+    spark.catalog.clearCache()
+    from tests.test_round9_hardening import _persistent_ids
+
+    baseline = _persistent_ids(spark)
+    df = REGISTRY["q_pagerank_parts_suppliers"].fn(spark, SF_SMOKE)
+    assert len(_LIVE_CACHES) == 1, "pagerank must register exactly one cache"
+    cached = _LIVE_CACHES[0]
+    assert cached.storageLevel.useMemory or cached.storageLevel.useDisk
+    df.count()  # the action that materializes (and caches) the edge list
+    # Round 9 made release automatic (an async QueryExecutionListener
+    # may free the cache before we do) — the invariant is the
+    # post-state, not which path released: after a synchronous
+    # release_caches() nothing is tracked and nothing NEW stays
+    # persistent.
+    release_caches()
+    assert not _LIVE_CACHES
+    import time as _time
+
+    deadline = _time.time() + 10
+    while _time.time() < deadline and not (_persistent_ids(spark) <= baseline):
+        _time.sleep(0.2)
+    assert _persistent_ids(spark) <= baseline

@@ -193,3 +193,17 @@ def test_release_caches_stays_synchronous_for_gates(spark):
     while time.time() < deadline and not (_persistent_ids(spark) <= baseline):
         time.sleep(0.2)
     assert _persistent_ids(spark) <= baseline
+
+
+def test_release_caches_survives_stopped_session():
+    """release_caches() must be safe to call on frames whose session is
+    gone (embedding drivers often tear down Spark first)."""
+    from flink_wikipedia_spark.plans.registry import _LIVE_CACHES, release_caches
+
+    class _Dead:
+        def unpersist(self):
+            raise RuntimeError("JVM gone")
+
+    _LIVE_CACHES.append(_Dead())
+    assert release_caches() == 0  # swallowed, not raised
+    assert not _LIVE_CACHES

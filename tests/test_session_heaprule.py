@@ -2,9 +2,12 @@
 now that it ships in session.py instead of living only in the docs:
 Q9/Q21 spilled 18-20 GB at 8 GB heap / 32 cores and the spill vanished
 at 1 GB/core, so the session factory warns whenever the JVM running
-tasks has less heap per slot than that."""
+tasks has less heap per slot than that. get_spark also rejects a
+malformed local-cluster master before it starts a JVM."""
 
 from __future__ import annotations
+
+import pytest
 
 from flink_wikipedia_spark.session import (
     HEAP_MB_PER_CORE_RULE,
@@ -54,3 +57,24 @@ def test_cluster_managers_are_out_of_scope():
     # no false alarm from the driver-side default
     assert heap_rule_warning("yarn", "8g") is None
     assert heap_rule_warning("spark://host:7077", "8g") is None
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [
+        "local-cluster[4, 8, 4096x]",
+        "local-cluster[4;8;4096]",
+        "local-cluster[4,8]",
+        "local-cluster[a,b,c]",
+    ],
+)
+def test_malformed_local_cluster_master_rejected(bad):
+    """get_spark must reject malformed local-cluster masters loudly —
+    the old rstrip/split parse turned 'local-cluster[4, 8, 4096]' into
+    spark.executor.memory=' 4096m' and a confusing JVM startup failure
+    (ADVICE r7). Whitespace around the fields is fine; anything else is
+    a ValueError BEFORE any JVM is started."""
+    from flink_wikipedia_spark.session import get_spark
+
+    with pytest.raises(ValueError, match="local-cluster"):
+        get_spark("tests-badmaster", master=bad)
