@@ -85,17 +85,6 @@ def filter_human_main(df: DataFrame) -> DataFrame:
     )
 
 
-def project_edit_columns(df: DataFrame) -> DataFrame:
-    """Early projection (reference O6, ``DataStreamJob.java:78-83``):
-    9 columns → (domain, new_length, old_length) before the shuffle.
-
-    Catalyst's ColumnPruning derives this automatically from downstream
-    usage, but keeping the explicit operator preserves the reference's
-    pipeline shape for parity tests.
-    """
-    return df.select("domain", "new_length", "old_length")
-
-
 def edit_size_expr() -> Column:
     """``Σ abs(new_length − old_length)`` (reference O9 inner loop,
     ``DataStreamJob.java:97-100``). Long arithmetic: exact, no decimal

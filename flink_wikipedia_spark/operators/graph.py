@@ -398,7 +398,7 @@ def pagerank(
     - budget: a FRESH persist is registered with track_cache as an
       unmaterialized intent — the caller's action materializes it and
       the release listener reclaims it afterwards, the exact lifecycle
-      tests/test_round9_hardening.py pins.
+      tests/test_pagerank_operator.py pins.
     - eps local: the Arrow toPandas drains the probe cache; unpersist
       immediately.
     - eps distributed: the loop's own actions reuse the probe cache;

@@ -158,18 +158,6 @@ def sql_lsh_bucket_duckdb(vec: str) -> str:
     return "CAST(" + " + ".join(terms) + " AS BIGINT)"
 
 
-def dist2_expr(a: Column | str, b: Column | str) -> Column:
-    """Squared L2 distance, same deterministic fold as dot_expr."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(sql_dist2_spark(a, b))
-    return _fold_sum(
-        F.zip_with(
-            a, b, lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double"))
-        )
-    )
-
-
 def sql_dist2_duckdb(a: str, b: str) -> str:
     """Same list_zip rewrite as sql_dot_duckdb (see there)."""
     return (
@@ -429,30 +417,17 @@ def pq_d2_cols(vec_col: Column | str, codebooks) -> list[Column]:
     return cols
 
 
-def pq_code_cols(pq_m: int) -> list[Column]:
-    """Argmin over each d2 table (first-min = lowest code tie-break)."""
-    return [
-        (F.array_position(F.col(f"d2_{m}"), F.array_min(F.col(f"d2_{m}"))) - 1)
-        .cast("int")
-        .alias(f"code_{m}")
-        for m in range(pq_m)
-    ]
-
-
 def pq_encode_pandas(
     df: DataFrame, codebooks, vec_col: str = "embedding"
 ) -> DataFrame:
-    """Arrow mapInPandas twin of pq_d2_cols + pq_code_cols for the
-    full-corpus encode scan: each Arrow batch becomes one vectorized
-    numpy distance computation ([B × sub] against [K × sub] per
-    subspace) instead of B interpreted expression folds. Map-only —
-    same shuffle profile as the expression form (none); the codebooks
-    ride the pickled closure (a few KB). argmin's first-min tie-break
-    matches pq_code_cols' array_position-of-min.
-
-    Kept alongside the expression form because the choice is measured,
-    not assumed — see SCALE.md's scorer A/B and ANN_ENCODER in
-    plans/queries_similarity.py for which one is registered."""
+    """PQ codes for the full-corpus encode scan: column ``code_m`` is
+    the index of the nearest codebook entry of subspace m (argmin of
+    the squared-L2 distances pq_d2_cols computes; first minimum = lowest
+    code on ties). Each Arrow batch becomes one vectorized numpy
+    distance computation ([B × sub] against [K × sub] per subspace)
+    instead of B interpreted expression folds — measured faster at
+    every scale (SCALE.md §"Corpus-encode scorer A/B"). Map-only; the
+    codebooks ride the pickled closure (a few KB)."""
     import numpy as np
     from pyspark.sql.types import IntegerType, StructField, StructType
 

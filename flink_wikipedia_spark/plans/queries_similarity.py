@@ -4,8 +4,6 @@
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -808,17 +806,12 @@ def q_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Pinned ≥ 0.7 by tests/test_curation_invariants.py. See SCALE.md.
 RF_NPROBE, RF_RERANK, RF_TOPK = 10, 150, 10
 
-# Corpus-encode scorer for the trained index: "numpy" (Arrow mapInPandas,
-# one vectorized batch op per Arrow batch) vs "expr" (interpreted
-# expression folds over literal codebook arrays). Measured head-to-head,
-# interleaved median-of-reps, identical results asserted
-# (tools/bench_ann_scorer.py): numpy 1.40× faster at sf0.1 (3.07 s vs
-# 4.30 s), 1.44× at sf1, 1.17× at sf10 — the end-to-end gap narrows at
-# scale because the probe-join + refine stages start to dominate, but
-# numpy never loses, so it is the registered path. "expr" stays for the
-# A/B and as the no-Python-worker fallback. Env override is for
-# benchmarking only.
-ANN_ENCODER = os.environ.get("SPARK_GRAFT_ANN_ENCODER", "numpy")
+# Corpus encode for the trained index: pq_encode_pandas (Arrow
+# mapInPandas, one vectorized numpy op per Arrow batch). Measured against
+# interpreted expression folds over literal codebook arrays, interleaved
+# median-of-reps with identical results: 1.40× faster at sf0.1 (3.07 s
+# vs 4.30 s), 1.44× at sf1, 1.17× at sf10, and never slower (SCALE.md
+# §"Corpus-encode scorer A/B"), so the expression form was deleted.
 
 
 @query("q_ann_ivfpq_refined", oracle=None)
@@ -830,9 +823,9 @@ def q_ann_ivfpq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     Index build (driver-side, cached): k-means coarse centroids and
     per-subspace PQ codebooks trained on a bounded sample
     (operators/similarity.train_ivfpq_index — the FAISS recipe: train
-    small, apply everywhere). Index application is literal-expression
-    maps: corpus vectors get (cell, 8 codes) — ~1/128 the bytes — in
-    one shuffle-free scan.
+    small, apply everywhere). Index application is a map: corpus
+    vectors get (cell, 8 codes) — ~1/128 the bytes — in one
+    shuffle-free scan, the codes from an Arrow-batched numpy encode.
 
     Search: queries probe their RF_NPROBE nearest cells (equi-join on
     centroid_id), candidates are scored by ADC (8 table lookups), the
@@ -846,7 +839,6 @@ def q_ann_ivfpq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the twin cannot be a static string; value-correctness is pinned
     by the recall + determinism property tests instead."""
     from flink_wikipedia_spark.operators.similarity import (
-        pq_code_cols,
         pq_d2_cols,
         pq_encode_pandas,
         train_ivfpq_index,
@@ -867,25 +859,13 @@ def q_ann_ivfpq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 99-115 s at 200 K vectors): a 16×64 literal array-of-arrays is
     # re-CONSTRUCTED per row before the interpreted fold even starts,
     # while ivf_assign's centroids arrive as broadcast join columns
-    # with zero per-row construction. For the PQ encode of the assigned
-    # corpus, ANN_ENCODER picks between the vectorized Arrow scorer and
-    # the expression-fold form (both map-only) — see the constant above.
+    # with zero per-row construction. The assigned corpus is then PQ
+    # encoded by pq_encode_pandas (map-only) — see the note above.
     pq_m = cbs.shape[0]
     assigned = ivf_assign(emb, cents_df, n_probe=1).select(
         "vec_id", "centroid_id", "embedding"
     )
-    if ANN_ENCODER == "numpy":
-        cands = pq_encode_pandas(assigned, cbs).withColumnRenamed(
-            "vec_id", "neighbor_id"
-        )
-    else:
-        cands = assigned.select(
-            "vec_id", "centroid_id", *pq_d2_cols("embedding", cbs)
-        ).select(
-            F.col("vec_id").alias("neighbor_id"),
-            "centroid_id",
-            *pq_code_cols(pq_m),
-        )
+    cands = pq_encode_pandas(assigned, cbs).withColumnRenamed("vec_id", "neighbor_id")
     queries = emb.filter(F.col("vec_id") < N_QUERY_VECS)
     # query side: probed cells + ADC lookup tables ride the broadcast
     probes = (
@@ -900,7 +880,7 @@ def q_ann_ivfpq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # ADC sum as ONE SQL string (the _pq_d2_frame rationale; code_m is
-    # INT here — pq_code_cols/pq_encode_pandas emit int — so no cast).
+    # INT here — pq_encode_pandas emits int — so no cast).
     adc_sql = " + ".join(
         f"element_at(d2_{m}, code_{m} + 1)" for m in range(pq_m)
     )

@@ -51,6 +51,7 @@ FAMILY_ANCHORS = (
 # no passing record in it. Update it in the commit that changes a
 # builder.
 ROUND_CHANGED: tuple[str, ...] = (
+    "q_ann_ivfpq_refined",          # expression corpus-encode form deleted
     "q_dedup_canonical",            # components checkpoint one direction
     "q_dedup_components",           # components checkpoint one direction
     "q_dedup_pipeline",             # MinHash candidate plan as SQL strings

@@ -228,11 +228,6 @@ def table_schema(name: str) -> StructType:
 _TS_UNIT_CACHE: dict[tuple[str, int, int], str] = {}
 
 
-def clear_ts_unit_cache() -> None:
-    """Drop all cached footer sniffs (test hook / manual invalidation)."""
-    _TS_UNIT_CACHE.clear()
-
-
 def _events_ts_unit(path: str) -> str:
     """Return the parquet time unit of the ``ts`` column at ``path``.
 
@@ -392,10 +387,3 @@ def load_table_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return df.repartition(target)
     return df
 
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view (mirrors the DuckDB
-    oracle's pre-registered views, so ``spark.sql`` text can name the
-    same tables)."""
-    for name in ALL_TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -19,8 +19,8 @@ large cluster up front:
   and coalesces to the 64 MB advisory size from map-output statistics —
   the same session handles sf0.001 (coalesces to a few tasks) and sf100
   (keeps hundreds, bounding per-task sort/join state) with zero knobs.
-  ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` pins an exact static count when a
-  deployment needs one.
+  ``get_spark(shuffle_partitions=N)`` pins an exact static count when a
+  caller needs one.
 - **Streaming checkpoints through FileSystemBasedCheckpointFileManager**
   — Spark's default FileContext-based manager forks a ``readlink``
   process for every checkpoint file it renames when the native Hadoop
@@ -159,13 +159,11 @@ def get_spark(
     # 19 M-row partitions into GC thrash and heap OOM under a static
     # count of 32, and 2.4× faster once partition count scaled with the
     # data. A 100 TB cluster tunes the SAME way: high initial, AQE
-    # coalesces. Explicit settings (arg or env) stay exact.
+    # coalesces. An explicit shuffle_partitions stays exact.
     adaptive_initial: int | None = None
     if shuffle_partitions is None:
-        env_parts = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-        shuffle_partitions = int(env_parts) if env_parts else int(_DEFAULT_CPUS)
-        if env_parts is None:
-            adaptive_initial = 512
+        shuffle_partitions = int(_DEFAULT_CPUS)
+        adaptive_initial = 512
 
     # Streaming state store: the heap-backed default is ~2× faster while
     # state fits in memory (measured: 33K vs 15K ev/s on the flagship at
@@ -223,10 +221,9 @@ def get_spark(
         # at 100 TB splits are capped by maxPartitionBytes exactly as
         # before, and tiny-file packing still charges 128 KB per file so
         # a million-small-file scan does not explode into tasks.
-        .config(
-            "spark.sql.files.openCostInBytes",
-            os.environ.get("SPARK_GRAFT_OPEN_COST_BYTES", str(128 * 1024)),
-        )
+        # Re-measured against 4 MB after the scan spread landed and kept
+        # (OPTIMIZATION_r15.md §7).
+        .config("spark.sql.files.openCostInBytes", str(128 * 1024))
         # --- Python boundary: always Arrow, never row-at-a-time ---
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # PySpark 4's DataFrame error-context capture (_with_origin)
@@ -278,13 +275,13 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.showConsoleProgress", "false")
     )
-    # SPARK_GRAFT_UI=1 exposes the UI's REST API for the bench/forensics
-    # instrumentation (stage_metrics.StageMetricsSampler reads per-query
-    # executor CPU / shuffle / spill deltas from it). Off by default —
-    # gates and tests don't pay for the HTTP server. When on: port 0
-    # (ephemeral — concurrent gates must not fight over 4040) and stage
-    # retention sized so a full bench suite (~5k stages) never sees the
-    # status store evict mid-run (eviction makes cumulative deltas lie).
+    # SPARK_GRAFT_UI=1 exposes the UI's REST API for the bench
+    # instrumentation (bench.py reads /jobs and /stages once, after its
+    # timed runs, and attributes each stage to a query by job group).
+    # Off by default — gates and tests don't pay for the HTTP server.
+    # When on: port 0 (ephemeral — concurrent gates must not fight over
+    # 4040) and job/stage retention sized so a full bench suite (~5k
+    # stages) keeps every stage until that one read at the end.
     if os.environ.get("SPARK_GRAFT_UI", "").lower() in ("1", "true", "yes"):
         builder = (
             builder.config("spark.ui.enabled", "true")
@@ -411,7 +408,9 @@ def nofork_fs_classes() -> str | None:
     the key hashes the source and the API jar's name (which carries the
     Hadoop version), so an upgrade recompiles. A cold compile takes
     1–2 s; it goes into a temp dir that is then renamed into place, so
-    concurrent launches never see half a class file."""
+    concurrent launches never see half a class file. A compile also
+    removes the ``build-*`` directories of other keys, which it
+    supersedes; a reused build touches nothing."""
 
     def unavailable(why: str) -> None:
         print(
@@ -463,6 +462,9 @@ def nofork_fs_classes() -> str | None:
         shutil.rmtree(tmp, ignore_errors=True)  # gone already once renamed
     if not os.path.isfile(os.path.join(final, _NOFORK_FS_CLASSFILE)):
         return unavailable(f"could not publish the compiled class to {final}")
+    for stale in glob.glob(os.path.join(java_dir, "build-*")):
+        if stale != final:
+            shutil.rmtree(stale, ignore_errors=True)
     return final
 
 

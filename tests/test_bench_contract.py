@@ -1,4 +1,4 @@
-"""Pin bench.py's driver-facing stdout contract.
+"""Pin bench.py's driver-facing stdout contract and its profile.
 
 The driver tails the LAST 2000 chars of bench stdout and parses the
 JSON line it finds there; rounds 1-10 all recorded ``"parsed": null``
@@ -7,14 +7,25 @@ these tests pin it against the REAL registry's names (the realistic
 worst case: 120+ queries with long snake_case names) so a future
 query-name or payload-field addition can't silently regrow the line
 past the window.
+
+The per-query profile (``queries_profile``) and the stream leg's
+``stream_layers`` ride the full artifact only; their attribution by job
+group is pinned on synthetic REST records here and end to end on a
+UI-enabled session in a child interpreter.
 """
 
 from __future__ import annotations
 
 import json
+import os
+import subprocess
+import sys
+import textwrap
 
 import bench
 from flink_wikipedia_spark.plans import REGISTRY
+from perfbench.layers import streaming_layers
+from tests.conftest import SF_SMOKE
 
 
 def _full_payload(per_query: dict[str, float]) -> dict:
@@ -34,7 +45,6 @@ def _full_payload(per_query: dict[str, float]) -> dict:
         "host_cpus": 32,
         "stream_events": 10000,
         "stream_events_per_sec": 39000.0,
-        "stream_trigger_ms": bench.trigger_phase_ms(_progress()),
         "skew_join": {
             "hot_key_fraction": 0.99,
             "fact_fanout": 50,
@@ -44,17 +54,23 @@ def _full_payload(per_query: dict[str, float]) -> dict:
         },
         "executor_metrics": True,
         "suite_cpu_sec": 123.456,
-        "queries_cpu_sec": {k: 1.234 for k in per_query},
-        "queries_shuffle_read_mb": {k: 56.789 for k in per_query},
-        "queries_spill_disk_mb": {},
+        "queries_profile": {
+            k: dict.fromkeys(bench.PROFILE_FIELDS, 56.789) for k in per_query
+        },
+        "stream_layers": streaming_layers(_progress(), [400.0, 410.0, 420.0], 6, 1),
     }
 
 
 def _progress() -> list[dict]:
     # three triggers shaped like StreamingQueryProgress: the first has
     # no state operator yet and skips queryPlanning
+    phases = (
+        "latestOffset", "queryPlanning", "addBatch", "walCommit", "commitOffsets",
+        "triggerExecution",
+    )
+
     def trigger(i: int, state: bool) -> dict:
-        d = {k: 10 * i + j for j, k in enumerate(bench.TRIGGER_PHASES)}
+        d = {k: 10 * i + j for j, k in enumerate(phases)}
         if i == 0:
             del d["queryPlanning"]
         return {
@@ -96,8 +112,9 @@ def test_compact_line_is_selfcontained_json_with_headline_fields():
     assert 0 < shown <= len(ranked)
     assert d["queries"] == dict(ranked[:shown])
     # the big instrumentation maps must NOT ride stdout
-    for banned in ("queries_cpu_sec", "queries_shuffle_read_mb"):
+    for banned in ("queries_profile", "stream_layers"):
         assert banned not in d
+    assert d["suite_cpu_sec"] == 123.456
     # small fixed dicts (skew evidence) DO ride stdout
     assert d["skew_join"]["sortmerge_salted_sec"] == 8.901
     # scaling evidence (r16): the compact line must prove the core
@@ -137,16 +154,138 @@ def test_compact_budget_holds_for_pathological_strings():
 
 def test_stream_trigger_phases_ride_the_full_payload_only():
     full = _full_payload(_registry_walls())
-    assert full["stream_trigger_ms"] == {
-        "latestOffset": 10,  # median of 0, 10, 20
-        "queryPlanning": 16,  # median of 11, 21: trigger 0 lacks it
-        "addBatch": 12,
-        "walCommit": 13,
-        "commitOffsets": 14,
-        "triggerExecution": 15,
-        "stateCommit": 7.5,  # median of 5, 10: trigger 0 has no state
-    }
-    assert bench.trigger_phase_ms([])["triggerExecution"] is None
+    layers = full["stream_layers"]
+    assert layers["streaming.triggers"] == 3
+    assert layers["streaming.latest_offset_ms"] == 10  # median of 0, 10, 20
+    assert layers["streaming.query_planning_ms"] == 16  # trigger 0 lacks it
+    assert layers["streaming.add_batch_ms"] == 12
+    assert layers["streaming.wal_commit_ms"] == 13
+    assert layers["streaming.commit_offsets_ms"] == 14
+    assert layers["streaming.sink_ms"] == 410.0
+    assert layers["streaming.tasks_per_trigger"] == 2
+    assert layers["streaming.state_commit_ms"] == 7.5  # trigger 0 has no state
     d = json.loads(bench.compact_payload(full))
-    assert "stream_trigger_ms" not in d
+    assert "stream_layers" not in d
     assert d["stream_events_per_sec"] == 39000.0
+
+
+def test_queries_profile_attributes_stages_by_job_group():
+    """One /jobs + /stages read, attributed by group: a stage two jobs
+    list counts once (for the earlier job), skipped stages and jobs
+    outside any query count nowhere, retried attempts add up, and each
+    field is the median over runs."""
+    jobs = [
+        {"jobId": 0, "jobGroup": "plans:0:q_a", "stageIds": [0]},
+        {"jobId": 1, "jobGroup": "exec:0:q_a", "stageIds": [0, 1, 2]},
+        {"jobId": 2, "jobGroup": "exec:0:q_b", "stageIds": [3]},
+        {"jobId": 3, "jobGroup": None, "stageIds": [4]},
+        {"jobId": 4, "jobGroup": "exec:1:q_b", "stageIds": [5]},
+    ]
+    mb = 2**20
+    stages = [
+        {"stageId": 0, "status": "COMPLETE", "executorCpuTime": 10**9},
+        {"stageId": 1, "status": "COMPLETE", "executorCpuTime": 2 * 10**9,
+         "shuffleReadBytes": mb, "memoryBytesSpilled": mb, "diskBytesSpilled": mb // 2},
+        {"stageId": 1, "attemptId": 1, "status": "COMPLETE", "executorCpuTime": 10**9},
+        {"stageId": 2, "status": "SKIPPED", "executorCpuTime": 5 * 10**9},
+        {"stageId": 3, "status": "COMPLETE", "executorCpuTime": 10**9,
+         "numCompleteTasks": 4},
+        {"stageId": 4, "status": "COMPLETE", "executorCpuTime": 7 * 10**9},
+        {"stageId": 5, "status": "COMPLETE", "executorCpuTime": 2 * 10**9},
+    ]
+    groups = bench.group_totals(jobs, stages)
+    assert groups["exec:0:q_b"]["numCompleteTasks"] == 4
+    t = {"build_s": 0.1, "exec_s": 0.2, "py4j_calls": 10}
+    prof = bench.queries_profile({"q_a": [t], "q_b": [t, t]}, groups)
+    assert set(prof) == {"q_a", "q_b"}
+    assert all(tuple(p) == bench.PROFILE_FIELDS for p in prof.values())
+    assert prof["q_a"] == {
+        "build_s": 0.1, "exec_s": 0.2, "py4j_calls": 10, "eager_jobs": 1,
+        "executor_cpu_s": 4.0, "shuffle_read_mb": 1.0, "spill_mb": 1.5,
+    }
+    assert prof["q_b"]["eager_jobs"] == 0
+    assert prof["q_b"]["executor_cpu_s"] == 1.5  # median of runs 1.0 and 2.0
+    assert prof["q_b"]["shuffle_read_mb"] == 0
+
+
+def test_sweep_without_ui_writes_walls_only(spark, monkeypatch):
+    """The fixture session has no UI: the sweep still times every build
+    and write, and the executor side is ``executor_metrics: false``
+    without any REST call."""
+    assert spark.sparkContext.uiWebUrl is None
+
+    def no_rest(*args, **kwargs):
+        raise AssertionError("REST call on a session without a UI")
+
+    monkeypatch.setattr(bench, "_rest", no_rest)
+    builders = {"q_map": lambda s, _: s.range(1000).selectExpr("id * 2 AS x")}
+    timings = bench.sweep(spark, SF_SMOKE, builders, 2)
+    assert len(timings["q_map"]) == 2
+    for t in timings["q_map"]:
+        assert t["build_s"] > 0 and t["exec_s"] > 0 and t["py4j_calls"] is None
+    assert set(bench.median_walls(timings)) == {"q_map"}
+    assert bench.executor_profile(spark, timings) == {"executor_metrics": False}
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
+
+
+def test_sweep_profiles_each_query_by_job_group_subprocess(tmp_path):
+    """The real path needs a UI-enabled session, which can't coexist
+    with the suite's fixture context — run the sweep in a child
+    interpreter over three tiny builders and check what the one REST
+    read attributes to each."""
+    code = textwrap.dedent(
+        """
+        import json
+        import os
+        os.environ["SPARK_GRAFT_UI"] = "1"
+        os.environ["SPARK_GRAFT_CPUS"] = "2"
+        import bench
+
+        spark = bench.get_spark("bench-profile-test")
+        spark.sparkContext.setLogLevel("ERROR")
+
+        def eager(s, _):
+            assert s.range(0, 10, 1, 1).count() == 10  # one job, no exchange
+            return s.range(10)
+
+        builders = {
+            "q_shuffle": lambda s, _: s.range(200_000)
+            .selectExpr("id % 50000 AS k").groupBy("k").count(),
+            "q_map": lambda s, _: s.range(200_000).selectExpr("id * 2 AS x"),
+            "q_eager": eager,
+        }
+        timings = bench.sweep(spark, "", builders, 2)
+        out = {
+            "walls": bench.median_walls(timings),
+            "profile": bench.executor_profile(spark, timings),
+        }
+        spark.stop()
+        print("PROFILE " + json.dumps(out))
+        """
+    )
+    env = dict(os.environ)
+    env.pop("SPARK_GRAFT_MASTER", None)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env["PYTHONPATH"] = repo + os.pathsep + env.get("PYTHONPATH", "")
+    done = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True,
+        timeout=300, env=env, cwd=str(tmp_path),
+    )
+    lines = [ln for ln in done.stdout.splitlines() if ln.startswith("PROFILE ")]
+    assert lines, done.stdout + done.stderr
+    out = json.loads(lines[-1][len("PROFILE "):])
+    profile, walls = out["profile"], out["walls"]
+    assert profile["executor_metrics"] is True
+    prof = profile["queries_profile"]
+    assert set(prof) == set(walls) == {"q_shuffle", "q_map", "q_eager"}
+    for name, p in prof.items():
+        assert tuple(p) == bench.PROFILE_FIELDS, name
+        # two runs: the medians are means, so the parts sum to the wall
+        assert abs(p["build_s"] + p["exec_s"] - walls[name]) <= 0.0015, (name, p)
+        assert p["py4j_calls"] > 0, (name, p)
+    assert prof["q_shuffle"]["shuffle_read_mb"] > 0, prof
+    assert prof["q_shuffle"]["executor_cpu_s"] > 0, prof
+    assert prof["q_map"]["shuffle_read_mb"] == 0, prof
+    assert prof["q_eager"]["eager_jobs"] == 1, prof
+    assert prof["q_shuffle"]["eager_jobs"] == prof["q_map"]["eager_jobs"] == 0, prof
+    assert profile["suite_cpu_sec"] > 0

@@ -287,9 +287,13 @@ def test_classes_compiled_once_then_reused(tmp_path, monkeypatch, capsys):
     """The first call compiles into a build directory next to the source
     and leaves no temp dir behind; later calls reuse it with no javac. A
     build directory without the class is reported, not put on a class
-    path, and nothing is left behind either."""
+    path, and nothing is left behind either. A compile removes the
+    build directory of a superseded key."""
     java = _source_copy(tmp_path, monkeypatch)
+    stale = java / "build-0000000000000000"
+    (stale / "flink_wikipedia_spark").mkdir(parents=True)
     classes = nofork_fs_classes()
+    assert not stale.exists()
     assert classes is not None and os.path.dirname(classes) == str(java)
     assert os.path.isfile(os.path.join(classes, session._NOFORK_FS_CLASSFILE))
     assert _mode(classes) == 0o755

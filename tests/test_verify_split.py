@@ -1,7 +1,13 @@
 """The staged oracle executor (tools/verify_split.py) must be exactly
 equivalent to monolithic execution: the sf100 pagerank oracle only fits
 the box when run statement-at-a-time, so the splitter's correctness IS
-the correctness of that evidence."""
+the correctness of that evidence.
+
+The splitter anchors WITH at the statement START (a nested, quoted or
+commented WITH is not a CTE header), survives /* */ block comments,
+matches CTE liveness case-insensitively (DuckDB identifiers are
+case-insensitive), and never early-drops a CTE whose name shadows a
+base view."""
 
 from __future__ import annotations
 
@@ -84,3 +90,70 @@ def test_staged_equals_monolithic_on_real_oracles(name):
         results.append(df[cols].sort_values(cols).reset_index(drop=True))
         con.close()
     assert results[0].equals(results[1])
+
+
+def test_nested_with_is_not_a_cte_header():
+    vs = _load()
+    sql = "SELECT * FROM (WITH t AS (SELECT 1 AS x) SELECT x FROM t)"
+    ctes, final = vs.split_ctes(sql)
+    assert ctes == [] and final == sql
+    # and run_staged on the untouched statement still evaluates it
+    assert vs.run_staged(duckdb.connect(), sql).iloc[0, 0] == 1
+
+
+def test_with_inside_string_or_comment_is_not_a_header():
+    vs = _load()
+    for sql in (
+        "SELECT 'WITH a AS (SELECT 1)' AS s",
+        "SELECT 2 AS v -- WITH x AS (...)\n",
+        "/* WITH x AS (SELECT 1) */ SELECT 3 AS v",
+    ):
+        ctes, final = vs.split_ctes(sql)
+        assert ctes == [], sql
+        assert final == sql
+
+
+def test_leading_comments_then_with_still_stages():
+    vs = _load()
+    sql = """
+    -- line comment first
+    /* then a block comment
+       with (unbalanced parens and the word WITH inside */
+    WITH a AS (SELECT 1 AS x /* inner block ( comment */),
+    b AS (SELECT x + 1 AS y FROM a)
+    SELECT y FROM b
+    """
+    ctes, final = vs.split_ctes(sql)
+    assert [n for n, _ in ctes] == ["a", "b"]
+    assert vs.run_staged(duckdb.connect(), sql).iloc[0, 0] == 2
+
+
+def test_unterminated_block_comment_is_loud():
+    vs = _load()
+    with pytest.raises(ValueError, match="unterminated"):
+        vs.split_ctes("WITH a AS (SELECT 1 /* oops) SELECT 1")
+
+
+def test_liveness_is_case_insensitive():
+    """Old scanner matched CTE references case-sensitively; ALPHA below
+    would not keep Alpha alive and the final SELECT failed loudly."""
+    vs = _load()
+    sql = (
+        "WITH Alpha AS (SELECT 5 AS v), pad AS (SELECT 1 AS z) "
+        "SELECT v FROM ALPHA"
+    )
+    assert vs.run_staged(duckdb.connect(), sql).iloc[0, 0] == 5
+
+
+def test_base_view_shadow_is_never_dropped_early():
+    """A CTE named like a base view must survive until the statement
+    ends: dropping it early silently rebinds later references to the
+    base view — the one failure mode that is wrong instead of loud."""
+    vs = _load()
+    con = duckdb.connect()
+    con.sql("CREATE VIEW orders AS SELECT 1 AS v")  # the decoy base view
+    sql = (
+        "WITH ORDERS AS (SELECT 99 AS v), pad AS (SELECT 0 AS z) "
+        "SELECT v FROM orders"
+    )
+    assert vs.run_staged(con, sql).iloc[0, 0] == 99
